@@ -23,6 +23,8 @@ operators/multimodal.synth_jpeg_media).
 from __future__ import annotations
 
 import struct
+import threading
+from collections import OrderedDict
 
 import numpy as np
 
@@ -126,19 +128,27 @@ def _build_codes(bits, vals):
     return codes
 
 
-_DECODE_MAP_CACHE: dict = {}
+# Decode maps are ~2 MB each (the 64K-entry LUT), and streams with
+# optimized Huffman tables bring new tables per image: keep the most
+# recently used few (the standard tables stay hot).
+_DECODE_MAP_CACHE_MAX = 16
+_DECODE_MAP_CACHE: OrderedDict = OrderedDict()
+_DECODE_MAP_LOCK = threading.Lock()
 
 
 def _build_decode_map(bits, vals):
     """(BITS, HUFFVAL) -> {(length, code): symbol}, plus a 16-bit-prefix
     LUT under the "__lut" key: lut[peek16] = (symbol << 5) | code_length,
     -1 for invalid prefixes — one array index replaces the bit-by-bit
-    dict walk per symbol. Cached per (bits, vals) so repeated decodes of
-    streams sharing tables (every standard-table JPEG) skip the build."""
+    dict walk per symbol. LRU-cached per (bits, vals), at most
+    _DECODE_MAP_CACHE_MAX tables, so repeated decodes of streams sharing
+    tables (every standard-table JPEG) skip the build."""
     key = (tuple(bits), tuple(vals))
-    hit = _DECODE_MAP_CACHE.get(key)
-    if hit is not None:
-        return hit
+    with _DECODE_MAP_LOCK:
+        hit = _DECODE_MAP_CACHE.get(key)
+        if hit is not None:
+            _DECODE_MAP_CACHE.move_to_end(key)
+            return hit
     out = {}
     lut = np.full(1 << 16, -1, dtype=np.int32)
     code = 0
@@ -152,7 +162,10 @@ def _build_decode_map(bits, vals):
             k += 1
         code <<= 1
     out["__lut"] = lut.tolist()  # plain list: ~10x faster scalar indexing
-    _DECODE_MAP_CACHE[key] = out
+    with _DECODE_MAP_LOCK:
+        _DECODE_MAP_CACHE[key] = out
+        if len(_DECODE_MAP_CACHE) > _DECODE_MAP_CACHE_MAX:
+            _DECODE_MAP_CACHE.popitem(last=False)
     return out
 
 
@@ -207,16 +220,6 @@ def _magnitude(v: int) -> tuple[int, int]:
     size = int(abs(v)).bit_length()
     bits = v if v > 0 else v + (1 << size) - 1
     return size, bits
-
-
-def _fdct_quant(plane: np.ndarray, qt: np.ndarray) -> np.ndarray:
-    """plane (H, W) float level-shifted -> (H//8 * W//8, 64) quantized
-    coefficients in zig-zag order, vectorized over blocks."""
-    h, w = plane.shape
-    blocks = plane.reshape(h // 8, 8, w // 8, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
-    coef = np.einsum("ux,nxy,vy->nuv", _M, blocks, _M)
-    q = np.round(coef / qt.reshape(8, 8)).astype(np.int64)
-    return q.reshape(-1, 64)[:, ZIGZAG]
 
 
 def _rgb_to_ycbcr(img: np.ndarray) -> np.ndarray:

@@ -516,11 +516,12 @@ def _unzigzag_np(v):
 
 def decode_tile_stats_np(buf: bytes) -> dict[str, dict]:
     """Decoded-vertex statistics per layer, computed from the raw bytes
-    with the vectorized varint decoder. Layers written by our encoders
-    (feature fields in 1,2,3,4 order, geometry last) take a fully
-    vectorized path whose only Python loop is a tight per-frame span scan;
-    anything irregular falls back to the scalar walker per layer, and
-    general (multi-part/polygon) geometries fall back per feature.
+    with the vectorized varint decoder. Every layer our encoders write
+    (back-to-back feature frames, fields in 1,2,3,4 order, geometry last)
+    takes a fully vectorized path whose only Python loop is a tight
+    per-frame span scan; general (multi-part/polygon) geometries decode
+    per feature. Raises ValueError naming the layer on an irregular
+    layer (any other frame layout).
     Returns {layer: {n_features, n_vertices, sum_px, sum_py, min_px,
     max_px, min_py, max_py, sum_ids}}."""
     out: dict[str, dict] = {}
@@ -531,11 +532,9 @@ def decode_tile_stats_np(buf: bytes) -> dict[str, dict]:
         ln, i = _read_varint(buf, i)
         layer_buf = buf[i : i + ln]
         i += ln
-        res = _layer_stats_fast(layer_buf)
-        if res is None:
-            res = _layer_stats_scalar(layer_buf)
-        if res is not None and res[1] is not None:
-            out[res[0]] = res[1]
+        name, stats = _layer_stats_fast(layer_buf)
+        if stats is not None:
+            out[name] = stats
     return out
 
 
@@ -643,18 +642,19 @@ def _layer_stats_fast(layer_buf: bytes):
     type, and geometry commands are all varints; strings live in the
     layer's key/value tables outside it — so ONE decode_varints_np pass
     plus a byte->value-index gather parses every feature header at once.
-    Returns (name, stats|None) or None to request the scalar fallback."""
+    Returns (name, stats|None); raises ValueError on an irregular frame
+    layout."""
     import numpy as np
 
     name, tag_starts, body_starts, body_ends = _frame_spans(layer_buf)
     if not tag_starts:
-        return (name, None) if name else None
+        return name, None
     ts = np.asarray(tag_starts, dtype=np.int64)
     bs = np.asarray(body_starts, dtype=np.int64)
     be = np.asarray(body_ends, dtype=np.int64)
     # frames must be back-to-back for the single flat varint decode
     if len(ts) > 1 and not bool((ts[1:] == be[:-1]).all()):
-        return None
+        raise ValueError(f"MVT layer {name!r}: feature frames not contiguous")
     off = int(ts[0])
     region_len = int(be[-1]) - off
     region = layer_buf[off : off + region_len]
@@ -701,103 +701,9 @@ def _layer_stats_fast(layer_buf: bytes):
     vcounts = geom_end_v - vstarts
     ok &= (geom_end_v >= 0) & (vcounts >= 0)
     if not bool(ok.all()):
-        return None  # irregular frame layout: scalar fallback
+        raise ValueError(f"MVT layer {name!r}: irregular feature frame layout")
     X, Y = _xy_from_geoms(vals, vstarts, vcounts, types_arr, np)
     return name, _stats_dict(int(ids.sum()), len(ids), X, Y)
-
-
-def _layer_stats_scalar(layer_buf: bytes):
-    """Scalar-walk layer stats (fallback for irregular layers)."""
-    import numpy as np
-
-    name, ids, types, geom_spans = _walk_layer_frames(layer_buf)
-    if not ids:
-        return (name, None) if name else None
-    all_geom = b"".join(layer_buf[a:b] for a, b in geom_spans)
-    if not all_geom:  # features exist but none carry geometry
-        Z = np.zeros(0, dtype=np.int64)
-        return name, _stats_dict(
-            int(np.asarray(ids, dtype=np.int64).sum()), len(ids), Z, Z
-        )
-    glens = np.array([b - a for a, b in geom_spans], dtype=np.int64)
-    goffs = np.zeros(len(geom_spans), dtype=np.int64)
-    np.cumsum(glens[:-1], out=goffs[1:])
-    vals, start_pos = decode_varints_np(all_geom)
-    vstarts = np.searchsorted(start_pos, goffs)
-    vcounts = np.diff(np.concatenate([vstarts, [len(vals)]]))
-    tarr = np.asarray(types, dtype=np.int64)
-    X, Y = _xy_from_geoms(vals, vstarts, vcounts, tarr, np)
-    return name, _stats_dict(
-        int(np.asarray(ids, dtype=np.int64).sum()), len(ids), X, Y
-    )
-
-
-def _walk_layer_frames(data: bytes):
-    """One tight pass over a layer message: (name, ids, types, geometry
-    byte spans). Single-byte tags/lengths take the inlined fast path —
-    this framing walk is the only per-feature Python left in the stats
-    decode; everything numeric is vectorized."""
-    n = len(data)
-    i = 0
-    name = ""
-    ids: list[int] = []
-    types: list[int] = []
-    spans: list[tuple[int, int]] = []
-    rv = _read_varint
-    while i < n:
-        tag = data[i]
-        if tag < 0x80:
-            i += 1
-        else:
-            tag, i = rv(data, i)
-        field, wire = tag >> 3, tag & 7
-        if wire == 2:
-            ln = data[i]
-            if ln < 0x80:
-                i += 1
-            else:
-                ln, i = rv(data, i)
-            if field == 2:
-                j = i
-                end = i + ln
-                fid = 0
-                ftype = 0
-                g0 = g1 = 0
-                while j < end:
-                    t2 = data[j]  # feature fields 1..4: tag is 1 byte
-                    j += 1
-                    f2, w2 = t2 >> 3, t2 & 7
-                    if w2 == 0:
-                        v = data[j]
-                        if v < 0x80:
-                            j += 1
-                        else:
-                            v, j = rv(data, j)
-                        if f2 == 1:
-                            fid = v
-                        elif f2 == 3:
-                            ftype = v
-                    else:
-                        l2 = data[j]
-                        if l2 < 0x80:
-                            j += 1
-                        else:
-                            l2, j = rv(data, j)
-                        if f2 == 4:
-                            g0, g1 = j, j + l2
-                        j += l2
-                ids.append(fid)
-                types.append(ftype)
-                spans.append((g0, g1))
-                i = end
-            elif field == 1:
-                name = data[i : i + ln].decode("utf-8")
-                i += ln
-            else:
-                i += ln
-        else:
-            _, i = rv(data, i)
-    return name, ids, types, spans
 
 
 def encode_polygon_frames_np(ids, xs, ys, ring_lens, rings_per_feat) -> bytes:

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import text
 from ..functions.hashing import portable_hash64, portable_hash64_pair
@@ -381,9 +382,10 @@ def connected_components(pairs: DataFrame, a: str = "id_a", b: str = "id_b",
     twice); labels start at least(id, min neighbor) — the first
     propagation folded into init; each round is one join + union + groupBy
     min (the self row makes every id present, so no left join is needed)
-    followed by the pointer jump; convergence is read from the label
-    checksum (labels only ever decrease toward the component minimum, so
-    an unchanged sum IS the fixpoint — no per-round change-join)."""
+    followed by the pointer jump; for integral ids convergence is read
+    from the label checksum (labels only ever decrease toward the
+    component minimum, so an unchanged sum IS the fixpoint — no per-round
+    change-join); other id types take the change-join probe."""
     e = F.explode(F.array(
         F.struct(F.col(a).alias("src"), F.col(b).alias("dst")),
         F.struct(F.col(b).alias("src"), F.col(a).alias("dst")),
@@ -395,15 +397,18 @@ def connected_components(pairs: DataFrame, a: str = "id_a", b: str = "id_b",
         .select("id", F.least("id", "mn").alias("component"))
         .localCheckpoint()
     )
-    numeric_ids = labels.schema["component"].dataType.typeName() in (
-        "byte", "short", "integer", "long", "float", "double", "decimal"
-    )
+    id_type = labels.schema["component"].dataType
+    integral_ids = isinstance(
+        id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    ) or (isinstance(id_type, T.DecimalType) and id_type.scale == 0)
 
     def _unchanged(prev_sum, frame, prev_frame):
         # labels are pointwise monotone non-increasing over a fixed id set,
-        # so for numeric ids an exact decimal sum is a sufficient change
-        # detector; non-numeric ids fall back to an anti-equality probe
-        if numeric_ids:
+        # so for integral ids an exact decimal sum is a sufficient change
+        # detector; every other id type (float, double and fractional
+        # decimals, whose decimal(38,0) cast can round a change away, or
+        # strings) falls back to an anti-equality probe
+        if integral_ids:
             s = frame.agg(
                 F.sum(F.col("component").cast("decimal(38,0)"))
             ).first()[0]
@@ -415,7 +420,7 @@ def connected_components(pairs: DataFrame, a: str = "id_a", b: str = "id_b",
         return chg.isEmpty(), None
 
     prev_sum = None
-    if numeric_ids:
+    if integral_ids:
         _, prev_sum = _unchanged(None, labels, None)
     converged = False
     for _ in range(max_iters):
@@ -442,7 +447,7 @@ def connected_components(pairs: DataFrame, a: str = "id_a", b: str = "id_b",
         labels = prop.join(comp_map, "component", "left").select(
             "id", F.coalesce("__c2", "component").alias("component")
         ).localCheckpoint()
-        if numeric_ids:
+        if integral_ids:
             _, prev_sum = _unchanged(None, labels, None)
     if not converged:
         # silently returning unconverged labels would hand dedupe_clusters

@@ -66,12 +66,12 @@ def _argmin_centroid_udf(cent_ids, cent_mat):
     ids = np.asarray(cent_ids, dtype=np.int64)
     C = np.asarray(cent_mat, dtype=np.float64)
 
-    @F.pandas_udf(T.IntegerType())
+    @F.pandas_udf(T.LongType())
     def assign(v):  # type: ignore[no-untyped-def]
         import pandas as pd
 
         if not len(v):
-            return pd.Series(np.zeros(0, dtype=np.int32))
+            return pd.Series(np.zeros(0, dtype=np.int64))
         X = np.array(v.tolist(), dtype=np.float64)
         d2 = np.zeros((len(X), len(C)))
         tmp = np.empty(len(X))
@@ -81,7 +81,7 @@ def _argmin_centroid_udf(cent_ids, cent_mat):
                 np.subtract(X[:, k], C[j, k], out=tmp)
                 np.multiply(tmp, tmp, out=tmp)
                 np.add(acc, tmp, out=acc)
-        return pd.Series(ids[np.argmin(d2, axis=1)].astype(np.int32))
+        return pd.Series(ids[np.argmin(d2, axis=1)])
 
     return assign
 
@@ -244,53 +244,6 @@ def ivf_train_centroids(corpus: DataFrame, n_centroids: int = 16,
             .select("centroid_id", F.col("s.m").alias("centroid"))
         )
     return cents
-
-
-def ivf_train_centroids_driver(corpus: DataFrame, n_centroids: int = 16,
-                               lloyd_iters: int = 2, c_id: str = "vec_id",
-                               vec_col: str = "embedding",
-                               max_sample: int = 65536,
-                               sample_seed: int = 42) -> DataFrame:
-    """The 100 TB training path: collect a bounded seeded sample to the
-    driver and run Lloyd in NumPy — k-means centroids converge on far less
-    data than the inverted file indexes, and driver-side training replaces
-    2 x lloyd_iters distributed jobs with one sample collect (centroids
-    are KB-scale either way). Semantics mirror ivf_train_centroids exactly:
-    smallest-id seeds, squared-L2 argmin with ties to the smaller centroid
-    id, per-cluster mean update, EMPTY clusters dropped — asserted
-    equivalent in tests/test_dedupe_similarity.py.
-    """
-    import numpy as np
-
-    n = corpus.count()
-    if n > max_sample:
-        corpus = corpus.sample(fraction=max_sample / n, seed=sample_seed)
-    rows = (
-        corpus.select(F.col(c_id).alias("id"), _as_double(F.col(vec_col)).alias("v"))
-        .orderBy("id")
-        .collect()
-    )
-    vecs = np.array([r["v"] for r in rows], dtype=np.float64)
-    cents = vecs[:n_centroids].copy()
-    cent_ids = np.arange(len(cents))
-    for _ in range(lloyd_iters):
-        # ||v - c||^2 argmin; ties go to the SMALLER centroid id (np.argmin
-        # returns the first minimum, and cent_ids is ascending)
-        d2 = ((vecs[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
-        keep, new_cents = [], []
-        for ci in range(len(cents)):
-            members = vecs[assign == ci]
-            if len(members):
-                keep.append(cent_ids[ci])
-                new_cents.append(members.mean(axis=0))
-        cents = np.array(new_cents)
-        cent_ids = np.array(keep)
-    spark = corpus.sparkSession
-    return spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in zip(cent_ids, cents)],
-        "centroid_id int, centroid array<double>",
-    )
 
 
 def ivf_assign(corpus: DataFrame, centroids: DataFrame, c_id: str = "vec_id",

@@ -301,78 +301,11 @@ def _pack_cell(z: Column, x: Column, y: Column) -> Column:
     return F.shiftleft(z.cast("long"), 58) + F.shiftleft(x.cast("long"), 29) + y.cast("long")
 
 
-def adaptive_cover_cells(west, south, east, north, z: int) -> Column:
-    """EXACT bbox cover: <= 4 cell keys at a per-row adaptive zoom zeff <= z
-    (finest level where the box spans <= 2 tiles per axis). Never truncates:
-    a continent-sized box simply covers at a coarser level."""
-    x0, x1 = geo.tile_x(west, F.lit(z)), geo.tile_x(east, F.lit(z))
-    y0, y1 = geo.tile_y(north, F.lit(z)), geo.tile_y(south, F.lit(z))  # y grows south
-    # levels to coarsen: smallest s with 2^s >= max span (then the shifted
-    # ranges span <= 2 tiles per axis — proof: x1>>s - x0>>s <= 1 iff
-    # x1 - x0 <= 2^s for any alignment)
-    d = F.greatest(x1 - x0, y1 - y0, F.lit(1).cast("long"))
-    s = F.ceil(F.log2(d.cast("double"))).cast("int")
-    zeff = (F.lit(z) - s).cast("long")
-    xs = F.sequence(_shr(x0, s), _shr(x1, s))
-    ys = F.sequence(_shr(y0, s), _shr(y1, s))
-    pairs = F.flatten(F.transform(xs, lambda x: F.transform(ys, lambda y: F.struct(x.alias("x"), y.alias("y")))))
-    return F.transform(pairs, lambda p: _pack_cell(zeff, p.x, p.y))
-
-
-def _ancestor_array(cover: Column) -> Column:
-    """Every ancestor cell (levels zeff-1 .. 0) of each cover cell, flat,
-    possibly with duplicates (siblings share most ancestors).
-
-    Level-0 cover cells have no ancestors: the sequence is guarded so a
-    world-spanning box doesn't emit a junk descending [1, 0] range (a
-    negative -1 level key + duplicate self key)."""
-    mask = (1 << 29) - 1
-    empty = F.expr("CAST(array() AS ARRAY<BIGINT>)")
-    return F.flatten(
-        F.transform(
-            cover,
-            lambda c: F.when(
-                F.shiftright(c, 58) >= 1,
-                F.transform(
-                    F.sequence(F.lit(1), F.shiftright(c, 58).cast("int")),
-                    lambda i: _pack_cell(
-                        F.shiftright(c, 58) - i,
-                        _shr(F.shiftright(c, 29).bitwiseAND(F.lit(mask)), i),
-                        _shr(c.bitwiseAND(F.lit(mask)), i),
-                    ),
-                ),
-            ).otherwise(empty),
-        )
-    )
-
-
-def cover_with_ancestors(cover: Column) -> Column:
-    """cover (array of packed cells, all at one level) -> cover plus every
-    ancestor cell of each cover cell up to level 0, distinct. <= 4 + 4*z
-    keys; sibling cells share most ancestors so typically ~cover + z."""
-    return F.array_distinct(F.concat(cover, _ancestor_array(cover)))
-
-
-def strict_ancestors(cover: Column) -> Column:
-    """Ancestors only (cover excluded) — the second join direction uses this
-    so equal-level pairs aren't matched twice. The level sits in the key's
-    top bits, so an ancestor (strictly coarser) can never equal a cover
-    cell — distinct alone suffices, no array_except."""
-    return F.array_distinct(_ancestor_array(cover))
-
-
-def cover_cells(west, south, east, north, z: int, max_cells: int = 256) -> Column:
-    """Back-compat shim: the exact adaptive split cover (the max_cells cap
-    is obsolete — coverage is now always exact at <= 4 cells)."""
-    return adaptive_cover_cells(west, south, east, north, z)
-
-
-# --- SQL-string twins of the cover expressions ------------------------------
-# Same arithmetic as adaptive_cover_cells/_ancestor_array, but built as a
-# handful of F.expr strings over materialized intermediate columns instead
-# of hundreds of py4j Column constructions: DataFrame BUILD time for an
-# overlap join drops ~1s (measured), and the physical plan is identical
-# modulo the extra (pruned) projections.
+# --- cover expressions, built as SQL strings --------------------------------
+# A handful of F.expr strings over materialized intermediate columns: the
+# same expressions built from py4j Column objects take hundreds of
+# constructions and ~1s more DataFrame BUILD time per overlap join
+# (measured).
 
 def _tile_x_sqlexpr(lon: str, z: int) -> str:
     return (
@@ -392,7 +325,9 @@ def _tile_y_sqlexpr(lat: str, z: int) -> str:
 _SHR = "CAST(floor(CAST({x} AS DOUBLE) / pow(2.0, CAST(__s AS DOUBLE))) AS BIGINT)"
 _MASK29 = (1 << 29) - 1
 
-# ancestors of every cell in __cov (levels zeff-1..0), flat with dups
+# ancestors of every cell in __cov (levels zeff-1..0), flat with dups;
+# level-0 cells have none — the CASE guard keeps a world-spanning box from
+# emitting a junk descending [1, 0] range (a negative-level key)
 _ANC_SQL = (
     "flatten(transform(__cov, c -> CASE WHEN shiftright(c, 58) >= 1 THEN "
     "transform(sequence(1, CAST(shiftright(c, 58) AS INT)), i -> "
@@ -406,8 +341,14 @@ _ANC_SQL = (
 
 def _with_adaptive_cover(df: DataFrame, box: tuple[str, str, str, str],
                          z: int, out: str = "__cov") -> DataFrame:
-    """df + `out` column = exact adaptive split cover of the named bbox
-    columns (SQL-expr twin of adaptive_cover_cells)."""
+    """df + `out` column = EXACT bbox cover of the named bbox columns:
+    <= 4 packed cell keys at a per-row adaptive zoom zeff <= z (finest
+    level where the box spans <= 2 tiles per axis). Never truncates: a
+    continent-sized box simply covers at a coarser level.
+
+    Levels to coarsen: the smallest s with 2^s >= max span; the shifted
+    ranges then span <= 2 tiles per axis (x1>>s - x0>>s <= 1 iff
+    x1 - x0 <= 2^s, for any alignment)."""
     west, south, east, north = box
     df = (
         df.withColumn("__x0", F.expr(_tile_x_sqlexpr(west, z)))
@@ -485,6 +426,9 @@ def overlap_candidate_pairs(ax: DataFrame, bx: DataFrame, z: int,
         "__cell", F.expr(f"explode(array_distinct(concat(__cov, {_ANC_SQL})))")
     ).drop("__cov")
     b_self = b_base.withColumn("__cell", F.explode("__cov")).drop("__cov")
+    # strict ancestors, so equal-level pairs are not matched twice; the
+    # level sits in the key's top bits, so an ancestor can never equal a
+    # cover cell and distinct alone suffices (no array_except)
     b_anc = b_base.withColumn(
         "__cell", F.expr(f"explode(array_distinct({_ANC_SQL}))")
     ).drop("__cov")
@@ -649,13 +593,13 @@ def knn_bbox_join(queries: DataFrame, boxes: DataFrame, k: int,
     """
     from pyspark.sql.window import Window
 
-    b = boxes.filter(
-        (F.col("minx") <= F.col("maxx")) & (F.col("miny") <= F.col("maxy"))
+    b = _with_adaptive_cover(
+        boxes.filter(
+            (F.col("minx") <= F.col("maxx")) & (F.col("miny") <= F.col("maxy"))
+        ).select(F.col(box_id).alias("__bid"), "minx", "miny", "maxx", "maxy"),
+        ("minx", "miny", "maxx", "maxy"), z,
     ).select(
-        F.col(box_id).alias("__bid"), "minx", "miny", "maxx", "maxy",
-        F.explode(
-            adaptive_cover_cells(F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), z)
-        ).alias("__cell"),
+        "__bid", "minx", "miny", "maxx", "maxy", F.explode("__cov").alias("__cell")
     )
     remaining = queries.select(
         F.col(query_id).alias("__qid"),

@@ -84,10 +84,10 @@ def encode_point_mvt(points_px: DataFrame, layer: str = "points",
 
     stats_only=True decodes each just-encoded tile IN this pass and emits
     MVT_STATS_SCHEMA rows instead of the tile table — same fusion as
-    merge_way_frames: the stats shadow query otherwise ships every tile's
-    bytes across the Arrow boundary twice (Python encode -> JVM -> Python
-    decode). The decode runs on the very buffer just assembled, so the
-    codec is exercised identically."""
+    encode_way_mvt_vertices(stats_only=True): the stats shadow query
+    otherwise ships every tile's bytes across the Arrow boundary twice
+    (Python encode -> JVM -> Python decode). The decode runs on the very
+    buffer just assembled, so the codec is exercised identically."""
     cols = ["z", "tx", "ty", id_col, "px", "py", *tag_cols]
 
     def encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -146,154 +146,22 @@ def encode_point_mvt(points_px: DataFrame, layer: str = "points",
     )
 
 
-def encode_way_mvt(ways_px: DataFrame, layer: str = "ways",
-                   id_block: int = 32768) -> DataFrame:
-    """ways_px: (z, tx, ty, way_id, pxs array<int>, pys array<int>) — one row
-    per (way, covering tile) with extent-space vertex arrays (may extend
-    past the tile edge into the 64 px buffer; clipping to extent+buffer is
-    done here).
-
-    TWO-STAGE parallel encode: protobuf feature frames are independent
-    length-delimited submessages, so stage 1 hash-distributes fixed
-    id-range blocks of each tile ((tile, way_id div id_block) keys) and
-    stage 2 concatenates block frames in id order and wraps the layer —
-    bytes identical to a single sorted pass, but the parallelism is
-    #tiles x #blocks instead of #tiles (dense tiles stop being stragglers).
-
-    Stage 1 is partition-batched, not per-group: the vertex arrays are
-    posexploded map-side so the exchange carries flat int columns (no
-    nested Arrow lists), the repartition count is pinned to
-    defaultParallelism (AQE would coalesce this small-by-bytes but
-    CPU-heavy Python stage into 1-2 tasks and serialize it), and each
-    partition encodes ALL its groups in one vectorized pass — a single
-    encode_line_frames_np call sliced per group by per-feature frame byte
-    lengths — instead of paying per-group pandas overhead.
-
-    Contract: a tile whose EVERY feature degenerates under cleanCoords
-    (<2 distinct points) emits NO row — the materialized tile table never
-    contains feature-less tiles, matching the reference encoder skipping
-    degenerate geometry (vt/encode.ts). Pinned in
-    tests/test_tiles.py::test_fully_degenerate_tile_emits_no_row for both
-    this path and encode_way_mvt_vertices."""
-    lo, hi = -mvt.BUFFER_PX, mvt.EXTENT + mvt.BUFFER_PX
-
-    def encode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        pdfs = [p for p in batches]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        if not len(pdf):
-            return
-        z = pdf["z"].to_numpy(dtype=np.int64)
-        tx = pdf["tx"].to_numpy(dtype=np.int64)
-        ty = pdf["ty"].to_numpy(dtype=np.int64)
-        blk = pdf["__blk"].to_numpy(dtype=np.int64)
-        wid = pdf["way_id"].to_numpy(dtype=np.int64)
-        seq = pdf["seq"].to_numpy(dtype=np.int64)
-        X = np.clip(pdf["px"].to_numpy(dtype=np.int64), lo, hi)
-        Y = np.clip(pdf["py"].to_numpy(dtype=np.int64), lo, hi)
-        # total order: (tile, blk, way, vertex seq) — group/feature runs
-        # become contiguous and bytes are parallelism-independent
-        order = np.lexsort((seq, wid, blk, ty, tx, z))
-        z, tx, ty, blk, wid = z[order], tx[order], ty[order], blk[order], wid[order]
-        X, Y = X[order], Y[order]
-        # feature boundaries: (tile, way) change — blk is a function of way
-        newf = np.ones(len(wid), dtype=bool)
-        newf[1:] = (
-            (wid[1:] != wid[:-1]) | (tx[1:] != tx[:-1])
-            | (ty[1:] != ty[:-1]) | (z[1:] != z[:-1])
-        )
-        # cleanCoords: consecutive-dup vertex drop within each feature
-        # (change/src/utils.ts:86-98), then drop degenerate (<2 pt) features
-        keep = np.ones(len(X), dtype=bool)
-        keep[1:] = (X[1:] != X[:-1]) | (Y[1:] != Y[:-1])
-        keep |= newf
-        fidx = np.cumsum(newf) - 1
-        n_f = int(fidx[-1]) + 1
-        klens = np.bincount(fidx[keep], minlength=n_f)
-        fstarts = np.nonzero(newf)[0]
-        sel = klens >= 2
-        vkeep = keep & sel[fidx]
-        ids = wid[fstarts][sel]
-        if not len(ids):
-            return
-        lens = klens[sel]
-        fz, ftx, fty, fblk = (
-            z[fstarts][sel], tx[fstarts][sel], ty[fstarts][sel], blk[fstarts][sel]
-        )
-        frames, flens = mvt.encode_line_frames_np(
-            ids, X[vkeep], Y[vkeep], lens, return_lens=True
-        )
-        # slice the frame buffer per (tile, blk) group
-        newg = np.ones(len(ids), dtype=bool)
-        newg[1:] = (
-            (ftx[1:] != ftx[:-1]) | (fty[1:] != fty[:-1])
-            | (fblk[1:] != fblk[:-1]) | (fz[1:] != fz[:-1])
-        )
-        gstarts = np.nonzero(newg)[0]
-        g_blen = np.add.reduceat(flens, gstarts)
-        g_n = np.add.reduceat(np.ones(len(ids), dtype=np.int64), gstarts)
-        boffs = np.zeros(len(gstarts), dtype=np.int64)
-        np.cumsum(g_blen[:-1], out=boffs[1:])
-        buf = memoryview(frames)
-        yield pd.DataFrame(
-            {
-                "z": fz[gstarts].astype("int32"),
-                "tx": ftx[gstarts], "ty": fty[gstarts], "blk": fblk[gstarts],
-                "n": g_n.astype("int32"),
-                "frames": [
-                    bytes(buf[int(o) : int(o + l)])
-                    for o, l in zip(boffs, g_blen)
-                ],
-            }
-        )
-
-    def merge_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        import hashlib
-
-        z, tx, ty = int(key[0]), int(key[1]), int(key[2])
-        pdf = pdf.sort_values("blk")
-        frames = b"".join(bytes(b) for b in pdf["frames"])
-        buf = mvt._len_delim(3, mvt.layer_wrap(layer, frames))
-        h = int.from_bytes(hashlib.md5(buf).digest()[:8], "big") >> 1
-        return pd.DataFrame(
-            [{"z": z, "tx": tx, "ty": ty, "n_features": int(pdf["n"].sum()),
-              "size_bytes": len(buf), "content_hash": h, "tile": buf}]
-        )
-
-    flat = (
-        ways_px.withColumn(
-            # integer div: exact for ids above 2^53 (double floor-division isn't)
-            "__blk", F.expr(f"way_id div {id_block}")
-        )
-        .select(
-            "z", "tx", "ty", "__blk", "way_id",
-            F.posexplode(F.arrays_zip("pxs", "pys")).alias("seq", "pp"),
-        )
-        .select(
-            "z", "tx", "ty", "__blk", "way_id", "seq",
-            F.col("pp.pxs").alias("px"), F.col("pp.pys").alias("py"),
-        )
-    )
-    par = ways_px.sparkSession.sparkContext.defaultParallelism
-    stage1 = flat.repartition(par, "z", "tx", "ty", "__blk").mapInPandas(
-        encode_partition,
-        schema="z int, tx long, ty long, blk long, n int, frames binary",
-    )
-    return stage1.groupBy("z", "tx", "ty").applyInPandas(merge_tile, schema=MVT_SCHEMA)
-
-
 def encode_way_mvt_vertices(verts: DataFrame, z: int, layer: str = "ways",
                             id_block: int = 8192,
                             extent: int = mvt.EXTENT,
                             stats_only: bool = False) -> DataFrame:
     """Vertex-direct line-tile pipeline: verts(way_id, s1, s2, lon, lat) —
     one row per way vertex, vertex order within a way ascending (s1, s2) —
-    straight to the materialized tile table. Bytes identical to
-    way_tile_px -> encode_way_mvt (same projection, rounding, clamping,
-    cleanCoords, frame codec; property-tested equal).
+    straight to the materialized tile table. Bytes identical to the
+    scalar mvt.encode_tile over way_tile_px rows clamped to the 64 px
+    buffer, cleanCoords'd and sorted by way id within each tile (tested
+    equal in tests/test_tiles.py).
+
+    Contract: a tile whose EVERY feature degenerates under cleanCoords
+    (<2 distinct points) emits NO row — the materialized tile table never
+    contains feature-less tiles, matching the reference encoder skipping
+    degenerate geometry (vt/encode.ts). Pinned in
+    tests/test_tiles.py::test_fully_degenerate_tile_emits_no_row.
 
     Why this shape: the JVM->Arrow boundary costs ~1 cell/µs, so the
     dominant cost of the array-explode pipeline is shipping the exploded
@@ -475,19 +343,11 @@ def encode_way_mvt_vertices(verts: DataFrame, z: int, layer: str = "ways",
     return merge_way_frames(stage1, layer)
 
 
-def merge_way_frames(stage1: DataFrame, layer: str = "ways",
-                     stats_only: bool = False) -> DataFrame:
+def merge_way_frames(stage1: DataFrame, layer: str = "ways") -> DataFrame:
     """Concatenate per-(tile, block) frame blobs in block order and wrap
     the layer — the stage-2 half of the two-stage parallel encode.
     Partition-batched mapInPandas on an explicit-count repartition (AQE
-    would serialize the tiny-by-bytes merge + the downstream decode).
-
-    stats_only=True decodes each assembled tile IN the merge pass and
-    emits MVT_STATS_SCHEMA rows instead of the tile table: the stats
-    shadow query otherwise ships every tile's bytes across the Arrow
-    boundary twice (Python merge -> JVM -> Python decode). The decoded
-    bytes are the very buffer just assembled, so the codec is exercised
-    identically."""
+    would serialize the tiny-by-bytes merge + the downstream decode)."""
 
     def merge_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
@@ -513,27 +373,21 @@ def merge_way_frames(stage1: DataFrame, layer: str = "ways",
             z, tx, ty = (
                 int(gkeys[start][0]), int(gkeys[start][1]), int(gkeys[start][2])
             )
-            if stats_only:
-                s = mvt.decode_tile_stats_np(buf).get(layer)
-                if s is not None and s["n_features"]:
-                    rows.append({"z": z, "tx": tx, "ty": ty, **s})
-            else:
-                h = int.from_bytes(hashlib.md5(buf).digest()[:8], "big") >> 1
-                rows.append(
-                    {
-                        "z": z, "tx": tx, "ty": ty,
-                        "n_features": int(n_col.iloc[start:i].sum()),
-                        "size_bytes": len(buf), "content_hash": h, "tile": buf,
-                    }
-                )
+            h = int.from_bytes(hashlib.md5(buf).digest()[:8], "big") >> 1
+            rows.append(
+                {
+                    "z": z, "tx": tx, "ty": ty,
+                    "n_features": int(n_col.iloc[start:i].sum()),
+                    "size_bytes": len(buf), "content_hash": h, "tile": buf,
+                }
+            )
             start = i
         if rows:
-            schema = MVT_STATS_SCHEMA if stats_only else MVT_SCHEMA
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+            yield pd.DataFrame(rows, columns=[f.name for f in MVT_SCHEMA.fields])
 
     par = stage1.sparkSession.sparkContext.defaultParallelism
     return stage1.repartition(par, "z", "tx", "ty").mapInPandas(
-        merge_partition, schema=MVT_STATS_SCHEMA if stats_only else MVT_SCHEMA
+        merge_partition, schema=MVT_SCHEMA
     )
 
 
@@ -899,7 +753,7 @@ def render_line_raster(ways_px: DataFrame, tile_size: int = 256,
     repeat blends are idempotent, so feature order can't change bytes.
 
     ways_px: (z, tx, ty, way_id, pxs array<int>, pys array<int>) in extent
-    space (see encode_way_mvt)."""
+    space (see way_tile_px)."""
 
     def render(key, pdf: pd.DataFrame) -> pd.DataFrame:
         import hashlib
@@ -986,13 +840,6 @@ def _draw_counts(img, counts, rgba) -> None:
         img[sel] = out
 
 
-def _blend(img, mask, rgba) -> None:
-    """One drawPixel pass over a boolean mask (see _draw_counts)."""
-    import numpy as np
-
-    _draw_counts(img, mask.astype(np.int32), rgba)
-
-
 def render_polygon_raster(rings_px: DataFrame, tile_size: int = 256,
                           rgba: tuple[int, int, int, int] = (120, 180, 90, 255)) -> DataFrame:
     """Scanline even-odd polygon fill (raster-tile.ts:279-330): fixed fill
@@ -1039,8 +886,8 @@ def composite_raster_inputs(points_px: DataFrame | None = None,
                             ways_px: DataFrame | None = None,
                             rings_px: DataFrame | None = None) -> DataFrame:
     """Union the three per-class tile inputs into one discriminated frame
-    for render_composite_raster. points_px from point_tile_px; ways_px as
-    encode_way_mvt; rings_px as encode_polygon_mvt."""
+    for render_composite_raster. points_px from point_tile_px; ways_px
+    from way_tile_px; rings_px as encode_polygon_mvt."""
     frames = []
     if rings_px is not None:
         frames.append(rings_px.select(
@@ -1137,7 +984,9 @@ def way_tile_px(ways: DataFrame, nodes: DataFrame, z: int,
                 extent: int = mvt.EXTENT) -> DataFrame:
     """ways(id, refs array<long>) + nodes(id, lon, lat) -> one row per
     (way, covering tile at z) with extent-space vertex arrays — the input
-    shape of encode_way_mvt / render_line_raster.
+    shape of render_line_raster and composite_raster_inputs. Vertices are
+    unclamped and may leave the tile; encode_way_mvt_vertices is the MVT
+    encoder for ways.
 
     Plan shape: ONE equi-join (J1 way->node resolution), tile fractions
     computed once per way (transform over the coord arrays — materialized

@@ -85,12 +85,6 @@ def scattered_lat(id_col) -> Column:
     return -85.0 + ((_c(id_col) * 7919) % 170000).cast("double") / 1000.0
 
 
-def scattered_sql(id_expr: str) -> tuple[str, str]:
-    lon = f"(-180.0 + ((({id_expr}) * 9973) % 360000)::DOUBLE / 1000.0)"
-    lat = f"(-85.0 + ((({id_expr}) * 7919) % 170000)::DOUBLE / 1000.0)"
-    return lon, lat
-
-
 # --- synthetic OSM versions / timestamps for merge semantics ---------------
 
 def synth_version(id_col) -> Column:

@@ -212,28 +212,38 @@ def test_connected_components_shapes(spark):
     assert surv == len({c for c, s, k in out.values()})
 
 
-def test_ivf_driver_training_matches_distributed(spark, sf_dir):
-    """ivf_train_centroids_driver (bounded-sample NumPy Lloyd — the 100 TB
-    path) must produce the SAME centroids as the distributed Lloyd on the
-    same corpus: identical seeds, argmin tie-breaks, mean updates, and
-    empty-cluster drops."""
-    from pyspark.sql import functions as F
+def test_ivf_assign_keeps_64bit_centroid_ids(spark):
+    """A centroid id above 2^31 comes back from ivf_assign unchanged: the
+    argmin UDF returns 64-bit ids, never a wrapped int32."""
+    big = (1 << 33) + 5
+    cents = spark.createDataFrame(
+        [(7, [0.0, 0.0]), (big, [10.0, 10.0])],
+        "centroid_id long, centroid array<double>",
+    )
+    corpus = spark.createDataFrame(
+        [(1, [0.5, 0.0]), (2, [9.0, 10.0])], "vec_id long, embedding array<double>"
+    )
+    got = {r["vec_id"]: r["centroid_id"]
+           for r in similarity.ivf_assign(corpus, cents).collect()}
+    assert got == {1: 7, 2: big}
 
-    from osmix_spark.operators import similarity
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    dist = similarity.ivf_train_centroids(emb, n_centroids=8, lloyd_iters=2)
-    drv = similarity.ivf_train_centroids_driver(emb, n_centroids=8, lloyd_iters=2)
-    d = {r["centroid_id"]: r["centroid"] for r in dist.collect()}
-    v = {r["centroid_id"]: r["centroid"] for r in drv.collect()}
-    assert set(d) == set(v)
-    for cid in d:
-        for x, y in zip(d[cid], v[cid]):
-            assert abs(x - y) < 1e-9, cid
-    # identical centroids imply an identical inverted file downstream
-    inv_d = {r["vec_id"]: r["centroid_id"] for r in similarity.ivf_assign(emb, dist).collect()}
-    inv_v = {r["vec_id"]: r["centroid_id"] for r in similarity.ivf_assign(emb, drv).collect()}
-    assert inv_d == inv_v
+def test_connected_components_fractional_ids(spark):
+    """Fractional ids converge by the change-join probe, not the label
+    checksum: on the chain 2.1-2.4-2.45-2.49 the first round moves labels
+    2.4 -> 2.1 and 2.45 -> 2.4, changes the decimal(38,0) sum rounds away
+    (every label casts to 2), so a checksum stop would return 2.4 for
+    2.49 instead of 2.1."""
+    from decimal import Decimal
+
+    for ddl, conv in (("double", float), ("decimal(4,2)", Decimal)):
+        ids = [conv(v) for v in ("2.1", "2.4", "2.45", "2.49")]
+        pairs = spark.createDataFrame(
+            list(zip(ids, ids[1:])), f"id_a {ddl}, id_b {ddl}"
+        )
+        comp = {r["id"]: r["component"]
+                for r in dedupe.connected_components(pairs).collect()}
+        assert comp == dict.fromkeys(ids, ids[0]), ddl
 
 
 def test_connected_components_iteration_cap_raises(spark):

@@ -178,9 +178,8 @@ def test_bbox_overlap_join_wide_boxes_exact(spark):
 
 
 def test_adaptive_cover_is_exact_and_small(spark):
-    """Every cover is <= 4 cells and its union contains the box."""
-    from pyspark.sql import functions as F
-
+    """Every cover the overlap join builds (_with_adaptive_cover) is <= 4
+    cells and its union contains the box."""
     from osmix_spark.operators import spatial
 
     boxes = spark.createDataFrame(
@@ -188,11 +187,8 @@ def test_adaptive_cover_is_exact_and_small(spark):
          (3, 10.0, 10.0, 10.0001, 45.0), (4, -100.0, 30.0, -20.0, 30.0001)],
         "id long, minx double, miny double, maxx double, maxy double",
     )
-    out = boxes.select(
-        "id", "minx", "miny", "maxx", "maxy",
-        spatial.adaptive_cover_cells(
-            F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), 12
-        ).alias("cover"),
+    out = spatial._with_adaptive_cover(
+        boxes, ("minx", "miny", "maxx", "maxy"), 12, out="cover"
     ).collect()
     for r in out:
         assert 1 <= len(r["cover"]) <= 4
@@ -239,9 +235,10 @@ def test_split_antimeridian_and_overlap(spark):
 
 
 def test_cover_key_budget(spark):
-    """Scale guard: the adaptive cover emits <= 4 keys and the ancestor
-    expansion <= 4 + 4z keys per row — a regression here multiplies every
-    overlap join's shuffle volume."""
+    """Scale guard: the overlap join's adaptive cover (_with_adaptive_cover)
+    emits <= 4 keys and its cover + ancestor expansion (_ANC_SQL) <= 4 + 4z
+    keys per row — a regression here multiplies every overlap join's
+    shuffle volume."""
     from pyspark.sql import functions as F
 
     from osmix_spark.operators import spatial
@@ -252,12 +249,12 @@ def test_cover_key_budget(spark):
         "id long, minx double, miny double, maxx double, maxy double",
     )
     z = 12
-    cov = spatial.adaptive_cover_cells(
-        F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), z
-    )
-    out = boxes.select(
-        F.size(cov).alias("n_cov"),
-        F.size(spatial.cover_with_ancestors(cov)).alias("n_anc"),
+    out = spatial._with_adaptive_cover(
+        boxes, ("minx", "miny", "maxx", "maxy"), z
+    ).select(
+        F.size("__cov").alias("n_cov"),
+        F.expr(f"size(array_distinct(concat(__cov, {spatial._ANC_SQL})))")
+        .alias("n_anc"),
     ).collect()
     for r in out:
         assert r["n_cov"] <= 4

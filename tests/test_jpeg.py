@@ -187,3 +187,20 @@ def test_truncated_header_raises_value_error():
             pass
         except Exception as e:  # noqa: BLE001
             raise AssertionError(f"pos={pos}: unexpected {type(e)}") from e
+
+
+def test_huffman_decode_cache_is_capped():
+    """Streams carrying their own Huffman tables (progressive, optimized)
+    must not grow the decode-map cache without bound: it holds at most
+    _DECODE_MAP_CACHE_MAX tables and evicts the least recently used."""
+    cap = jpeg._DECODE_MAP_CACHE_MAX
+    bits = [1] + [0] * 15  # one symbol, one 1-bit code
+    for sym in range(cap + 8):
+        assert jpeg._build_decode_map(bits, [sym])[(1, 0)] == sym
+        assert len(jpeg._DECODE_MAP_CACHE) <= cap
+    assert len(jpeg._DECODE_MAP_CACHE) == cap
+    assert (tuple(bits), (cap + 7,)) in jpeg._DECODE_MAP_CACHE
+    assert (tuple(bits), (0,)) not in jpeg._DECODE_MAP_CACHE
+    # decoding rebuilds evicted tables on demand
+    img = _block_constant(16, 5)
+    assert (jpeg.decode_baseline(jpeg.encode_baseline(img))[:, :, 0] == img).all()

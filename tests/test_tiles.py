@@ -226,15 +226,38 @@ def test_way_tile_px_spans_tiles(spark):
     west = {r["tx"]: r["pxs"][0] for r in out}
     assert west[1] < 0 <= west[0]
     # end-to-end: the exploded rows encode into valid MVT tiles
-    enc = tiles.encode_way_mvt(tiles.way_tile_px(ways, nodes, z=1)).collect()
-    assert len(enc) == 2 and all(r["n_features"] == 1 for r in enc)
+    enc = _scalar_way_tiles(out)
+    assert len(enc) == 2 and all(n == 1 for _buf, n in enc.values())
+    for buf, _n in enc.values():
+        assert [f["id"] for f in mvt.decode_tile(buf)["ways"]] == [7]
+
+
+def _scalar_way_tiles(px_rows, layer="ways"):
+    """Reference line tiles from way_tile_px rows through the scalar
+    mvt.encode_tile: vertices clamped to the 64 px buffer, consecutive
+    duplicates dropped (cleanCoords), features with < 2 points skipped,
+    ways ascending within each tile. -> {(z, tx, ty): (bytes, n_features)}"""
+    lo, hi = -mvt.BUFFER_PX, mvt.EXTENT + mvt.BUFFER_PX
+    feats = {}
+    for r in sorted(px_rows, key=lambda r: r["way_id"]):
+        pts = []
+        for x, y in zip(r["pxs"], r["pys"]):
+            p = (min(max(x, lo), hi), min(max(y, lo), hi))
+            if not pts or p != pts[-1]:
+                pts.append(p)
+        if len(pts) >= 2:
+            feats.setdefault((r["z"], r["tx"], r["ty"]), []).append(
+                {"id": r["way_id"], "type": mvt.GEOM_LINESTRING,
+                 "geometry": [pts], "tags": {}}
+            )
+    return {k: (mvt.encode_tile({layer: f}), len(f)) for k, f in feats.items()}
 
 
 def test_vertex_direct_way_encode_bytes_identical(spark):
     """encode_way_mvt_vertices (tile explode inside the Arrow boundary)
-    must produce byte-identical tiles to way_tile_px -> encode_way_mvt
-    (JVM array explode), including the projection rounding and
-    cleanCoords/degenerate handling — the two are interchangeable."""
+    must produce byte-identical tiles to the scalar mvt.encode_tile over
+    way_tile_px rows (JVM array explode), including the projection
+    rounding and cleanCoords/degenerate handling."""
     import pyspark.sql.functions as F
 
     from osmix_spark import queries as q
@@ -250,12 +273,7 @@ def test_vertex_direct_way_encode_bytes_identical(spark):
     nodes = q._part_points(spark, sf_dir).select(
         F.col("p_partkey").alias("id"), "lon", "lat"
     )
-    old = {
-        (r["z"], r["tx"], r["ty"]): (bytes(r["tile"]), r["n_features"])
-        for r in tiles.encode_way_mvt(
-            tiles.way_tile_px(refs, nodes, z=12), id_block=8192
-        ).collect()
-    }
+    ref = _scalar_way_tiles(tiles.way_tile_px(refs, nodes, z=12).collect())
     verts = (
         q._t(spark, sf_dir, "lineitem")
         .select(
@@ -270,9 +288,9 @@ def test_vertex_direct_way_encode_bytes_identical(spark):
         (r["z"], r["tx"], r["ty"]): (bytes(r["tile"]), r["n_features"])
         for r in tiles.encode_way_mvt_vertices(verts, z=12).collect()
     }
-    assert set(old) == set(new) and len(old) > 0
-    for k in old:
-        assert old[k] == new[k]
+    assert set(ref) == set(new) and len(ref) > 0
+    for k in ref:
+        assert ref[k] == new[k]
 
     # stats_only (per-block decode fused into the encode pass + JVM-side
     # distributive rollup) must equal decoding the materialized tiles
@@ -378,6 +396,25 @@ def test_decoded_stats_empty_geometry_layer():
     assert s["n_features"] == 1 and s["n_vertices"] == 0 and s["sum_ids"] == 3
 
 
+def test_decoded_stats_irregular_layer_raises():
+    """A feature frame laid out unlike our encoders' (geometry before
+    type) is an error naming the layer, never a silently different
+    decode."""
+    import pytest
+
+    geom = b"".join(
+        mvt._varint(v) for v in mvt._encode_geometry(mvt.GEOM_POINT, [[(1, 2)]])
+    )
+    body = (
+        mvt._tag(1, 0) + mvt._varint(5) + mvt._len_delim(4, geom)
+        + mvt._tag(3, 0) + mvt._varint(mvt.GEOM_POINT)
+    )
+    buf = mvt._len_delim(3, mvt.layer_wrap("odd", mvt._len_delim(2, body)))
+    assert mvt.decode_tile(buf)["odd"][0]["geometry"] == [[(1, 2)]]
+    with pytest.raises(ValueError, match="'odd'"):
+        mvt.decode_tile_stats_np(buf)
+
+
 def test_polygon_ring_fully_off_tile_collapses(spark):
     """A ring entirely beyond the 64 px buffer clamps to a degenerate
     (< 4 distinct vertex) shape and is dropped, like the scalar path."""
@@ -422,8 +459,7 @@ def test_fully_degenerate_tile_emits_no_row(spark):
     collapses under cleanCoords (all vertices identical -> <2 points) is
     DROPPED from the materialized tile table — matching the reference
     encoder, which skips degenerate geometry (vt/encode.ts) and never
-    materializes feature-less tiles. Both the exploded-array and
-    vertex-direct paths agree."""
+    materializes feature-less tiles."""
     from osmix_spark.sources import fixtures
 
     # way 1: all four vertices at one point (degenerate, lands in the
@@ -438,16 +474,12 @@ def test_fully_degenerate_tile_emits_no_row(spark):
     ways = spark.createDataFrame(
         [(1, [1, 2, 1], None), (2, [3, 4], None)], fixtures.WAY_SCHEMA
     )
-    enc = tiles.encode_way_mvt(tiles.way_tile_px(ways, nodes, z=1)).collect()
-    assert {(r["tx"], r["ty"]) for r in enc} == {(1, 0)}
-    assert all(r["n_features"] == 1 for r in enc)
-
-    from pyspark.sql import functions as F
     refs = ways.select(
         F.col("id").alias("way_id"), F.posexplode("refs").alias("s1", "ref")
     ).withColumn("s2", F.col("s1"))
     verts = refs.join(
         nodes.select(F.col("id").alias("ref"), "lon", "lat"), "ref"
     ).select("way_id", "s1", "s2", "lon", "lat")
-    enc2 = tiles.encode_way_mvt_vertices(verts, z=1).collect()
-    assert {(r["tx"], r["ty"]) for r in enc2} == {(1, 0)}
+    enc = tiles.encode_way_mvt_vertices(verts, z=1).collect()
+    assert {(r["tx"], r["ty"]) for r in enc} == {(1, 0)}
+    assert all(r["n_features"] == 1 for r in enc)

@@ -239,9 +239,11 @@ def main() -> None:
             "lo_spread": lo_i["spread"], "hi_spread": hi_i["spread"],
         }
 
+    clean_pairs = [] if fallback_polluted else pairs
+    reject_tag = "POLLUTED" if fallback_polluted else "DISCARDED"
     pair_table = (
-        [pair_row("clean", e, l, h) for e, l, h in pairs]
-        + [pair_row("DISCARDED", e, l, h) for e, l, h in rejected]
+        [pair_row("clean", e, l, h) for e, l, h in clean_pairs]
+        + [pair_row(reject_tag, e, l, h) for e, l, h in rejected]
     )
     result = {
         "job": "flagship pages geocode + cell assign + spatial join + tile agg",
@@ -250,7 +252,7 @@ def main() -> None:
         "low": lo,
         "high": hi,
         "all_efficiencies": [round(e, 3) for e, _l, _h in pairs],
-        "clean_pairs": len(pairs),
+        "clean_pairs": len(clean_pairs),
         "discarded_pairs": discarded,
         "scaling_efficiency": round(eff, 3),
         "scaling_efficiency_min_pair": round(eff_min, 3),
@@ -291,7 +293,7 @@ per-tile aggregation. Input: {lo['n_pages']:,} pages derived from
 = **{eff:.3f}** (target >= 0.8: {"PASS" if eff >= 0.8 else "FAIL"}).
 
 Raw timings (median pair): local[{n}] {lo['times']}, local[{4*n}]
-{hi['times']}. Efficiency across the {len(pairs)} CLEAN interleaved pairs
+{hi['times']}. Efficiency across the {len(pairs)} {reject_tag if fallback_polluted else "CLEAN"} interleaved pairs
 (sorted): {result['all_efficiencies']} — median **{eff:.3f}**, min
 **{eff_min:.3f}** ({min_note}). **Level-median efficiency {eff_agg:.3f}**
 (per-level median wall across all clean pairs: a per-pair ratio is exposed
