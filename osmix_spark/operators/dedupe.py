@@ -65,17 +65,21 @@ def minhash_signatures(shingles: DataFrame, id_col: str = "doc_id",
     )
 
 
-def _capped_band_pairs(bands_df: DataFrame, id_col: str, max_bucket: int,
-                       on_oversized, extra_cols: tuple[str, ...] = ()) -> DataFrame:
-    """Shared band-bucket pair expansion with the giant-bucket cap.
+def band_pairs(bands_df: DataFrame, id_col: str, max_bucket: int,
+               on_oversized, extra_cols: tuple[str, ...] = ()) -> DataFrame:
+    """The banded self-join every LSH family shares: documents in the same
+    (band, bh) bucket become (id_a, id_b) pairs, id_a < id_b, with the
+    giant-bucket cap.
 
     bands_df: (id, band, bh, __sig[, extra...]). Buckets with more than
     max_bucket members are NOT pairwise expanded — a boilerplate flood of
     N near-identical docs in one band hash would emit N^2/2 pairs, an
     output-cardinality blowup no AQE skew split can reduce. Oversized
     buckets are routed through exact-fingerprint grouping instead: members
-    sharing the full signature (__sig) are linked as a star to the group's
-    min id (O(N) pairs, connectivity preserved for clustering); members
+    sharing the full signature (__sig: the signature columns themselves,
+    never a hash of them, so a hash collision cannot link two different
+    signatures) are linked as a star to the group's min id (O(N) pairs,
+    connectivity preserved for clustering); members
     whose exact signatures differ are dropped and accounted to the
     on_oversized side channel as (band, bh, n_docs) rows — persist them
     via plans/lineage.checkpoint when auditability is required."""
@@ -121,7 +125,7 @@ def lsh_candidate_pairs(sig: DataFrame, id_col: str = "doc_id",
     rows_per_band = num_hashes // bands.
 
     Buckets larger than max_bucket fall back to exact-signature star
-    linking (see _capped_band_pairs) — the N^2 flood guard."""
+    linking (see band_pairs) — the N^2 flood guard."""
     rpb = num_hashes // bands
     sig_cols = [f"h{i}" for i in range(num_hashes)]
     structs = []
@@ -133,11 +137,11 @@ def lsh_candidate_pairs(sig: DataFrame, id_col: str = "doc_id",
     # one posexplode, not a union of per-band selects: a union re-evaluates
     # the signature pipeline once per band branch
     bands_df = sig.select(
-        F.col(id_col), F.xxhash64(*sig_cols).alias("__sig"),
+        F.col(id_col), F.struct(*sig_cols).alias("__sig"),
         F.posexplode(F.array(*structs)).alias("__p", "e"),
     ).select(id_col, "e.band", "e.bh", "__sig")
     return (
-        _capped_band_pairs(bands_df, id_col, max_bucket, on_oversized)
+        band_pairs(bands_df, id_col, max_bucket, on_oversized)
         .select("id_a", "id_b")
         .distinct()
     )
@@ -214,7 +218,7 @@ def simhash_near_dupes(sim: DataFrame, id_col: str = "doc_id",
     share a band); verified with exact popcount hamming distance.
 
     Buckets larger than max_bucket fall back to exact-simhash star linking
-    (hamming 0 by construction — see _capped_band_pairs)."""
+    (hamming 0 by construction — see band_pairs)."""
     bw = bits // bands
     mask = (1 << bw) - 1
     structs = []
@@ -227,8 +231,8 @@ def simhash_near_dupes(sim: DataFrame, id_col: str = "doc_id",
     ).select(id_col, "e.band", "e.bh", "__sig")
     hamming = F.bit_count(F.col("__sig_a").bitwiseXOR(F.col("__sig_b")))
     return (
-        _capped_band_pairs(bands_df, id_col, max_bucket, on_oversized,
-                           extra_cols=("__sig",))
+        band_pairs(bands_df, id_col, max_bucket, on_oversized,
+                   extra_cols=("__sig",))
         .select("id_a", "id_b", hamming.alias("hamming"))
         .distinct()
         .filter(F.col("hamming") <= max_hamming)

@@ -35,7 +35,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..functions import geo
-from . import spatial
+from . import merge, spatial
 
 _FOOTISH = ("footway", "path", "cycleway", "bridleway", "steps")
 
@@ -189,19 +189,7 @@ def find_intersection_points(ways: DataFrame, nodes: DataFrame, z: int = 13,
     O(|patch| x local density) instead of O(|base|^2 density)."""
     wc = _way_coords(ways, nodes).filter(is_intersection_candidate(F.col("tags")))
     boxes = wc.select("id", "tags", "ordered_refs", "lons", "lats", "minx", "miny", "maxx", "maxy")
-    if candidates is not None:
-        cand_ids = candidates.select(
-            F.col(candidates.columns[0]).cast("long").alias("id")
-        ).distinct()
-        a_src = boxes.join(F.broadcast(cand_ids), "id", "left_semi")
-        b_src = boxes.join(
-            F.broadcast(cand_ids.withColumn("__cand", F.lit(True))), "id", "left"
-        ).withColumn("__cand", F.coalesce(F.col("__cand"), F.lit(False)))
-    else:
-        a_src = boxes
-        b_src = boxes.withColumn("__cand", F.lit(False))
-    a = a_src.select(*[F.col(c).alias(f"a_{c}") for c in a_src.columns])
-    b = b_src.select(*[F.col(c).alias(f"b_{c}") for c in b_src.columns])
+    a, b, keep_once = merge.id_pair_sides(boxes, candidates)
     # exact adaptive-cover candidate join (no truncation for long ways)
     cands = spatial.overlap_candidate_pairs(
         a, b, z,
@@ -212,21 +200,13 @@ def find_intersection_points(ways: DataFrame, nodes: DataFrame, z: int = 13,
         F.col("a_minx"), F.col("a_miny"), F.col("a_maxx"), F.col("a_maxy"),
         F.col("b_minx"), F.col("b_miny"), F.col("b_maxx"), F.col("b_maxy"),
     )
-    # IdPairs canonicalization: without candidates a_id < b_id; with them,
-    # one-sided pairs keep the candidate as way a, both-candidate pairs
-    # canonicalize by id
-    pair_once = (
-        F.col("a_id") < F.col("b_id")
-        if candidates is None
-        else (F.col("a_id") != F.col("b_id"))
-        & (~F.col("b___cand") | (F.col("a_id") < F.col("b_id")))
-    )
     pairs = (
-        cands.filter(pair_once)
+        cands.filter(keep_once)
         .filter(overlap)
         .filter(ways_should_connect(F.col("a_tags"), F.col("b_tags")))
         .dropDuplicates(["a_id", "b_id"])
-        .drop("b___cand")
+        # by name: a scoped side b carries id_pair_sides' extra column
+        .select(*a.columns, *[f"b_{c}" for c in boxes.columns])
     )
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -295,9 +275,7 @@ def create_intersections(ways: DataFrame, nodes: DataFrame, z: int = 13,
 
     # first allocated id = next_entity_id(nodes) = true max + 1 (0 on an
     # empty layer, negatives allocate toward zero — safe-id-allocation.test.ts)
-    from . import merge as _merge
-
-    max_id = _merge.next_entity_id(nodes) - 1
+    max_id = merge.next_entity_id(nodes) - 1
     # deterministic distributed id allocation: rank within cell partitions +
     # per-cell offsets (the tiny offsets window runs over #cells rows, not
     # #creates — no single-task global window at scale)

@@ -35,7 +35,7 @@ the reference throws on cycles, we cap iterations and assert convergence).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -90,42 +90,48 @@ def dedupe_nodes(nodes: DataFrame, radius_m: float = DEDUPE_RADIUS_M,
         entity_version(F.col("tags")).alias("version"),
         tag_count(F.col("tags")).alias("ntags"),
     )
-    if candidates is None:
-        a_src = ranked
-        b_src = ranked.withColumn("__cand", F.lit(False))
-    else:
-        cand = candidates.select(
-            F.col(candidates.columns[0]).cast("long").alias("id")
-        ).distinct()
-        a_src = ranked.join(F.broadcast(cand), "id", "left_semi")
-        b_src = ranked.join(
-            F.broadcast(cand.withColumn("__cand", F.lit(True))), "id", "left"
-        ).withColumn("__cand", F.coalesce(F.col("__cand"), F.lit(False)))
-    a = spatial._explode_neighbors(
-        a_src.select(*[F.col(c).alias(f"a_{c}") for c in a_src.columns]),
-        "a_lon", "a_lat", z,
-    )
-    b = b_src.select(*[F.col(c).alias(f"b_{c}") for c in b_src.columns]).withColumn(
-        "__cell", geo.cell_key(F.col("b_lon"), F.col("b_lat"), F.lit(z))
-    )
+    a, b, keep_once = id_pair_sides(ranked, candidates)
+    a = spatial._explode_neighbors(a, "a_lon", "a_lat", z)
+    b = b.withColumn("__cell", geo.cell_key(F.col("b_lon"), F.col("b_lat"), F.lit(z)))
     dist = geo.haversine_m(F.col("a_lon"), F.col("a_lat"), F.col("b_lon"), F.col("b_lat"))
-    # symmetric pair dedupe (IdPairs): without candidates the canonical order
-    # is a_id < b_id; with candidates, one-sided pairs keep the candidate on
-    # the a side and both-candidate pairs canonicalize by id
-    pair_once = (
-        F.col("a_id") < F.col("b_id")
-        if candidates is None
-        else (F.col("a_id") != F.col("b_id"))
-        & (~F.col("b___cand") | (F.col("a_id") < F.col("b_id")))
+    pairs = a.join(b, "__cell").filter(keep_once).filter(dist <= radius_m)
+    return flatten_replacements(_best_winner(_pair_winners(pairs)))
+
+
+def id_pair_sides(src: DataFrame, candidates: DataFrame | None = None
+                  ) -> tuple[DataFrame, DataFrame, Column]:
+    """IdPairs (changeset.ts:783-801) for a self-join over `src` (with an
+    `id` column): returns (a, b, keep_once) — `src` with every column
+    prefixed `a_` / `b_`, and the predicate that keeps each pair once.
+
+    Without candidates keep_once is a_id < b_id. With a 1-column frame of
+    candidate ids only pairs touching >= 1 candidate survive (the
+    reference's outer loop over the patch): side a holds only candidates,
+    a one-sided pair keeps its candidate on side a, and a pair of two
+    candidates is kept once, by id order. Side b then carries one extra
+    boolean column; callers project their output columns by name."""
+    a_cols = [F.col(c).alias(f"a_{c}") for c in src.columns]
+    b_cols = [F.col(c).alias(f"b_{c}") for c in src.columns]
+    if candidates is None:
+        return src.select(*a_cols), src.select(*b_cols), F.col("a_id") < F.col("b_id")
+    cand = candidates.select(
+        F.col(candidates.columns[0]).cast("long").alias("id")
+    ).distinct()
+    a = src.join(F.broadcast(cand), "id", "left_semi").select(*a_cols)
+    b = src.join(
+        F.broadcast(cand.withColumn("__cand", F.lit(True))), "id", "left"
+    ).select(*b_cols, F.coalesce(F.col("__cand"), F.lit(False)).alias("b___cand"))
+    keep_once = (F.col("a_id") != F.col("b_id")) & (
+        ~F.col("b___cand") | (F.col("a_id") < F.col("b_id"))
     )
-    pairs = (
-        a.join(b, "__cell")
-        .filter(pair_once)
-        .filter(dist <= radius_m)
-        .drop("__cell", "b___cand")
-        .distinct()
-    )
-    # the winner of a pair by the reference's rule
+    return a, b, keep_once
+
+
+def _pair_winners(pairs: DataFrame) -> DataFrame:
+    """Duplicate pairs (a_/b_ id, version, ntags) -> distinct
+    (from_id, to_id, w_version, w_ntags): the loser maps to the winner by
+    the reference's pairwise rule — higher version wins; tie -> more tags
+    wins; full tie -> the larger id survives."""
     a_wins = (
         (F.col("a_version") > F.col("b_version"))
         | ((F.col("a_version") == F.col("b_version")) & (F.col("a_ntags") > F.col("b_ntags")))
@@ -135,22 +141,30 @@ def dedupe_nodes(nodes: DataFrame, radius_m: float = DEDUPE_RADIUS_M,
             & (F.col("a_id") > F.col("b_id"))
         )
     )
-    raw = pairs.select(
-        F.when(a_wins, F.col("b_id")).otherwise(F.col("a_id")).alias("from_id"),
-        F.when(a_wins, F.col("a_id")).otherwise(F.col("b_id")).alias("to_id"),
-        F.when(a_wins, F.col("a_version")).otherwise(F.col("b_version")).alias("w_version"),
-        F.when(a_wins, F.col("a_ntags")).otherwise(F.col("b_ntags")).alias("w_ntags"),
-    )
-    # a loser paired with several winners keeps the best winner (deterministic)
+
+    def pick(if_a: str, if_b: str) -> Column:
+        return F.when(a_wins, F.col(if_a)).otherwise(F.col(if_b))
+
+    return pairs.select(
+        pick("b_id", "a_id").alias("from_id"),
+        pick("a_id", "b_id").alias("to_id"),
+        pick("a_version", "b_version").alias("w_version"),
+        pick("a_ntags", "b_ntags").alias("w_ntags"),
+    ).distinct()
+
+
+def _best_winner(winners: DataFrame) -> DataFrame:
+    """(from_id, to_id, w_version, w_ntags) -> (from_id, to_id): a loser
+    claimed by several winners keeps the best one (version, then tag
+    count, then max id) — deterministic."""
     w = Window.partitionBy("from_id").orderBy(
         F.desc("w_version"), F.desc("w_ntags"), F.desc("to_id")
     )
-    repl = (
-        raw.withColumn("__rn", F.row_number().over(w))
+    return (
+        winners.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select("from_id", "to_id")
     )
-    return flatten_replacements(repl)
 
 
 def flatten_replacements(repl: DataFrame, max_iters: int = 16) -> DataFrame:
@@ -366,67 +380,23 @@ def dedupe_ways(ways: DataFrame, nodes: DataFrame,
         losers = groups.filter(F.col("__rn") > 1).select(key, F.col("id").alias("from_id"))
         return losers.join(winners, key).select("from_id", "to_id", "w_version", "w_ntags")
 
-    def pair_map(key: str, cand_ids: DataFrame) -> DataFrame:
+    def pair_map(key: str) -> DataFrame:
         """Candidate-scoped pairwise variant of group_map: each candidate
         way pairs with every same-hash way; winner per pair by the same
         (version, ntags, max-id) rule. Equivalent to group_map after chain
         flattening when every way is a candidate."""
-        cols = [F.col("id").alias("a_id"), F.col("version").alias("a_version"),
-                F.col("ntags").alias("a_ntags"), F.col(key)]
-        a = (
-            ranked.join(F.broadcast(cand_ids), "id", "left_semi")
-            .filter(F.col(key).isNotNull()).select(*cols)
+        a, b, keep_once = id_pair_sides(
+            ranked.filter(F.col(key).isNotNull()).select("id", "version", "ntags", key),
+            candidates,
         )
-        b = (
-            ranked.filter(F.col(key).isNotNull())
-            .join(F.broadcast(cand_ids.withColumn("__cand", F.lit(True))), "id", "left")
-            .select(
-                F.col("id").alias("b_id"), F.col("version").alias("b_version"),
-                F.col("ntags").alias("b_ntags"), F.col(key),
-                F.coalesce(F.col("__cand"), F.lit(False)).alias("__b_cand"),
-            )
+        return _pair_winners(
+            a.join(b, F.col(f"a_{key}") == F.col(f"b_{key}")).filter(keep_once)
         )
-        p = (
-            a.join(b, key)
-            .filter(F.col("a_id") != F.col("b_id"))
-            # IdPairs: both-candidate pairs once (canonical by id); one-sided
-            # pairs keep the candidate on the a side
-            .filter(~F.col("__b_cand") | (F.col("a_id") < F.col("b_id")))
-        )
-        a_wins = (
-            (F.col("a_version") > F.col("b_version"))
-            | ((F.col("a_version") == F.col("b_version"))
-               & (F.col("a_ntags") > F.col("b_ntags")))
-            | ((F.col("a_version") == F.col("b_version"))
-               & (F.col("a_ntags") == F.col("b_ntags"))
-               & (F.col("a_id") > F.col("b_id")))
-        )
-        return p.select(
-            F.when(a_wins, F.col("b_id")).otherwise(F.col("a_id")).alias("from_id"),
-            F.when(a_wins, F.col("a_id")).otherwise(F.col("b_id")).alias("to_id"),
-            F.when(a_wins, F.col("a_version")).otherwise(F.col("b_version")).alias("w_version"),
-            F.when(a_wins, F.col("a_ntags")).otherwise(F.col("b_ntags")).alias("w_ntags"),
-        ).distinct()
 
-    if candidates is None:
-        both = group_map("geom_hash").unionByName(group_map("prop_hash"))
-    else:
-        cand_ids = candidates.select(
-            F.col(candidates.columns[0]).cast("long").alias("id")
-        ).distinct()
-        both = pair_map("geom_hash", cand_ids).unionByName(
-            pair_map("prop_hash", cand_ids)
-        )
+    per_key = group_map if candidates is None else pair_map
     # a way claimed by both paths keeps the better winner (then max id)
-    w = Window.partitionBy("from_id").orderBy(
-        F.desc("w_version"), F.desc("w_ntags"), F.desc("to_id")
-    )
-    repl = (
-        both.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("from_id", "to_id")
-    )
-    return flatten_replacements(repl)
+    both = per_key("geom_hash").unionByName(per_key("prop_hash"))
+    return flatten_replacements(_best_winner(both))
 
 
 def explode_members(relations: DataFrame) -> DataFrame:

@@ -38,6 +38,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from ..functions import geo
 
@@ -215,41 +216,53 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int,
     """k nearest points per query, ordered by (distance, point id) — the
     distributed twin of geoflatbush incremental expansion (ways.ts:369-381).
 
-    Ring expansion with a sufficiency guarantee: a result set at ring r is
-    final only if the k-th distance <= r * (minimum tile ground size),
-    i.e. no unexplored cell could contain a closer point. Queries that fail
-    the guarantee re-run at a wider ring (driver loop, bounded by max_ring —
-    each round is one cell equi-join, not a cross join).
+    Ring expansion with a sufficiency guarantee (`_knn_rings`); each round
+    is one cell equi-join, not a cross join.
     """
-    from pyspark.sql.window import Window
-
     p = points.select(
         F.col(point_id).alias("__pid"),
         F.col(p_lon).alias("__plon"),
         F.col(p_lat).alias("__plat"),
         geo.cell_key(F.col(p_lon), F.col(p_lat), F.lit(z)).alias("__cell"),
     )
-    remaining = queries.select(
+    queries = queries.select(
         F.col(query_id).alias("__qid"),
         F.col(q_lon).alias("__qlon"),
         F.col(q_lat).alias("__qlat"),
     )
+    return _knn_rings(
+        queries,
+        lambda q, ring: _explode_neighbors(q, "__qlon", "__qlat", z, ring).join(p, "__cell"),
+        geo.haversine_m(F.col("__qlon"), F.col("__qlat"), F.col("__plon"), F.col("__plat")),
+        "__pid", k, z, max_ring,
+    ).withColumnsRenamed({"__qid": query_id, "__pid": point_id})
+
+
+def _knn_rings(remaining: DataFrame, ring_candidates, dist: Column, cand_id: str,
+               k: int, z: int, max_ring: int) -> DataFrame:
+    """The kNN ring loop of knn_join and knn_bbox_join (geoflatbush
+    `around()`, ways.ts:369-381): remaining = unresolved (__qid, __qlon,
+    __qlat) queries; ring_candidates(queries, ring) = their candidates in
+    the (2*ring+1)^2 cell block; dist = query-to-candidate distance;
+    cand_id = the candidate id, which breaks distance ties.
+
+    A query's top k at ring r are final only if it has k of them and the
+    k-th distance <= r * tile ground size, i.e. no unexplored cell could
+    hold a closer candidate; the rest re-run at 2r. At max_ring the rest
+    keep a best-effort top k. Returns (__qid, cand_id, dist_m, rank)."""
+    w = Window.partitionBy("__qid").orderBy(F.col("dist_m"), F.col(cand_id))
     # worst-case tile ground size at the query latitude (shrinks poleward, so
     # using cos(lat) of each query is conservative per-query)
+    tile_ground = (
+        F.lit(EARTH_CIRCUMFERENCE_M) * F.cos(F.radians(F.col("__qlat"))) / F.lit(1 << z)
+    )
     results: DataFrame | None = None
     ring = 1
     while True:
-        cand = _explode_neighbors(remaining, "__qlon", "__qlat", z, ring).join(p, "__cell")
-        dist = geo.haversine_m(F.col("__qlon"), F.col("__qlat"), F.col("__plon"), F.col("__plat"))
-        w = Window.partitionBy("__qid").orderBy(F.col("dist_m"), F.col("__pid"))
         topk = (
-            cand.withColumn("dist_m", dist)
+            ring_candidates(remaining, ring).withColumn("dist_m", dist)
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= k)
-        )
-        # sufficiency: k-th distance must be covered by the explored ring
-        tile_ground = (
-            F.lit(EARTH_CIRCUMFERENCE_M) * F.cos(F.radians(F.col("__qlat"))) / F.lit(1 << z)
         )
         stats = topk.groupBy("__qid").agg(
             F.max("dist_m").alias("__kth"), F.count("*").alias("__n"),
@@ -266,10 +279,7 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int,
         if ring >= max_ring or remaining.isEmpty():
             break
         ring *= 2
-    return results.select(
-        F.col("__qid").alias(query_id), F.col("__pid").alias(point_id),
-        F.col("dist_m"), F.col("__rn").alias("rank"),
-    )
+    return results.select("__qid", cand_id, "dist_m", F.col("__rn").alias("rank"))
 
 
 # ---------------------------------------------------------------------------
@@ -587,12 +597,10 @@ def knn_bbox_join(queries: DataFrame, boxes: DataFrame, k: int,
     the box (clamp then haversine, geoflatbush's boxDist); inverted bboxes
     (geometry-less entities, ways.ts:350-359) are excluded.
 
-    Same ring-expansion sufficiency loop as knn_join: boxes are exploded to
-    covering cells once; each round equi-joins the unresolved queries'
-    neighbor cells against that cover.
+    Ring expansion runs through `_knn_rings`, the loop knn_join uses:
+    boxes are exploded to covering cells once; each round equi-joins the
+    unresolved queries' multilevel neighbor cells against that cover.
     """
-    from pyspark.sql.window import Window
-
     b = _with_adaptive_cover(
         boxes.filter(
             (F.col("minx") <= F.col("maxx")) & (F.col("miny") <= F.col("maxy"))
@@ -601,51 +609,27 @@ def knn_bbox_join(queries: DataFrame, boxes: DataFrame, k: int,
     ).select(
         "__bid", "minx", "miny", "maxx", "maxy", F.explode("__cov").alias("__cell")
     )
-    remaining = queries.select(
+    queries = queries.select(
         F.col(query_id).alias("__qid"),
         F.col(q_lon).alias("__qlon"),
         F.col(q_lat).alias("__qlat"),
     )
     near_lon = F.greatest(F.col("minx"), F.least(F.col("__qlon"), F.col("maxx")))
     near_lat = F.greatest(F.col("miny"), F.least(F.col("__qlat"), F.col("maxy")))
-    results: DataFrame | None = None
-    ring = 1
-    while True:
+
+    def ring_candidates(q: DataFrame, ring: int) -> DataFrame:
         # multilevel probe: boxes are covered at a per-row adaptive zoom
         # (possibly coarser than z), so the query emits its neighbor block
         # plus every ancestor of the block — any box cell intersecting the
         # block is an ancestor of some block cell and therefore matches
-        cand = (
-            _explode_neighbors_multilevel(remaining, "__qlon", "__qlat", z, ring)
+        return (
+            _explode_neighbors_multilevel(q, "__qlon", "__qlat", z, ring)
             .join(b, "__cell")
             .dropDuplicates(["__qid", "__bid"])
         )
-        dist = geo.haversine_m(F.col("__qlon"), F.col("__qlat"), near_lon, near_lat)
-        w = Window.partitionBy("__qid").orderBy(F.col("dist_m"), F.col("__bid"))
-        topk = (
-            cand.withColumn("dist_m", dist)
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-        )
-        tile_ground = (
-            F.lit(EARTH_CIRCUMFERENCE_M) * F.cos(F.radians(F.col("__qlat"))) / F.lit(1 << z)
-        )
-        stats = topk.groupBy("__qid").agg(
-            F.max("dist_m").alias("__kth"), F.count("*").alias("__n"),
-            F.first(tile_ground).alias("__tg"),
-        )
-        done_q = stats.filter(
-            (F.col("__n") >= k) & (F.col("__kth") <= F.col("__tg") * ring)
-        ).select("__qid")
-        if ring >= max_ring:
-            done_q = stats.select("__qid")
-        done = topk.join(done_q, "__qid", "left_semi")
-        results = done if results is None else results.unionByName(done)
-        remaining = remaining.join(done_q, "__qid", "left_anti")
-        if ring >= max_ring or remaining.isEmpty():
-            break
-        ring *= 2
-    return results.select(
-        F.col("__qid").alias(query_id), F.col("__bid").alias(box_id),
-        F.col("dist_m"), F.col("__rn").alias("rank"),
-    )
+
+    return _knn_rings(
+        queries, ring_candidates,
+        geo.haversine_m(F.col("__qlon"), F.col("__qlat"), near_lon, near_lat),
+        "__bid", k, z, max_ring,
+    ).withColumnsRenamed({"__qid": query_id, "__bid": box_id})

@@ -21,8 +21,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .functions import geo, s2 as s2f, text
-from .functions.hashing import (portable_hash64, portable_hash64_pair,
-                                portable_hash64_pair_sql, portable_hash64_sql)
+from .functions.hashing import (portable_hash64, portable_hash64_pair_sql,
+                                portable_hash64_sql)
 from .operators import merge, spatial
 from .sources import synth
 
@@ -1106,21 +1106,16 @@ def text_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-shingles) — the signature stage of MinHash-LSH near-dup detection.
     One shingle explode, ONE md5 per shingle (h_i = h1 + i*h2,
     Kirsch-Mitzenmacher), 8 mins aggregated in a single pass."""
+    from .operators import dedupe as _dedupe
+
     # small parquet reads as one split; spread rows before the shingle
     # explode so the md5 work parallelizes (at real scale the scan has
     # thousands of splits and this repartition is a no-op to remove)
     docs = _t(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    sh = (
-        docs.select("doc_id", text.tokens(F.col("text")).alias("toks"))
-        .select("doc_id", F.explode(text.shingles_from_tokens(F.col("toks"), 3)).alias("sh"))
-        .distinct()
-    )
-    h1, h2 = portable_hash64_pair(F.col("sh"))
-    return sh.groupBy("doc_id").agg(
-        *[F.min(h1 + F.lit(i) * h2).alias(f"mh{i}") for i in range(8)]
-    )
+    sig = _dedupe.minhash_signatures(_dedupe.shingle_set(docs), num_hashes=8)
+    return sig.select("doc_id", *[F.col(f"h{i}").alias(f"mh{i}") for i in range(8)])
 
 
 @_q(
@@ -1149,41 +1144,34 @@ def text_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-duplicate pairs = docs sharing any band hash. Bucket join on the
     band hash (equi-join, skew-safe), symmetric pair dedupe.
 
-    The band table (2 tiny rows per doc) is materialized with ONE
-    posexplode + localCheckpoint before the self-join: the former
-    union-of-selects referenced the shingle-explode + md5 signature
-    pipeline once per band per join side (4 full evaluations in the
-    static plan)."""
+    The operators/dedupe signature stage, then this query's own band hash,
+    then the shared banded self-join `dedupe.band_pairs`: the band table
+    (2 tiny rows per doc, from ONE posexplode) is checkpointed before the
+    self-join, and buckets over the cap fall back to exact-signature star
+    links."""
+    from .operators import dedupe as _dedupe
+
     # small parquet reads as one split; spread rows before the shingle
     # explode so the md5 work parallelizes (at real scale the scan has
     # thousands of splits and this repartition is a no-op to remove)
     docs = _t(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    sh = (
-        docs.select("doc_id", text.tokens(F.col("text")).alias("toks"))
-        .select("doc_id", F.explode(text.shingles_from_tokens(F.col("toks"), 3)).alias("sh"))
-        .distinct()
-    )
-    h1, h2 = portable_hash64_pair(F.col("sh"))
-    sig = sh.groupBy("doc_id").agg(
-        *[F.min(h1 + F.lit(i) * h2).alias(f"b{i}") for i in range(4)]
-    )
-    bh0 = (F.col("b0") % 1000000007) * 1000003 + (F.col("b1") % 1000000007)
-    bh1 = (F.col("b2") % 1000000007) * 1000003 + (F.col("b3") % 1000000007)
+    sig = _dedupe.minhash_signatures(_dedupe.shingle_set(docs), num_hashes=4)
+    bh0 = (F.col("h0") % 1000000007) * 1000003 + (F.col("h1") % 1000000007)
+    bh1 = (F.col("h2") % 1000000007) * 1000003 + (F.col("h3") % 1000000007)
     bands = sig.select(
         "doc_id",
+        F.struct("h0", "h1", "h2", "h3").alias("__sig"),
         F.posexplode(F.array(
             F.struct(F.lit(0).alias("band"), bh0.alias("bh")),
             F.struct(F.lit(1).alias("band"), bh1.alias("bh")),
         )).alias("__p", "e"),
-    ).select("doc_id", "e.band", "e.bh").localCheckpoint()
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band", "bh")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band", "bh")
+    ).select("doc_id", "e.band", "e.bh", "__sig")
+    # max_bucket: the giant-bucket cap lsh_candidate_pairs defaults to
     return (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
+        _dedupe.band_pairs(bands, "doc_id", max_bucket=65536, on_oversized=None)
+        .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
         .distinct()
     )
 

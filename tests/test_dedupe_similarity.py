@@ -115,6 +115,26 @@ def test_giant_bucket_cap_bounds_flood(spark):
     assert all(r["hamming"] == 0 for r in spairs)
 
 
+def test_star_fallback_groups_on_signature(spark):
+    """Two groups of 150 docs share band 0 (h0, h1) and differ in every
+    other hash. With max_bucket=100 the shared band-0 bucket (300 docs)
+    and each group's own buckets are oversized; the star fallback groups
+    members by their exact signature, so the pairs are exactly the two
+    stars (149 + 149) and none crosses the groups."""
+    from pyspark.sql import Row
+
+    def sig(g):
+        return {f"h{k}": 7 + k * 11 if k < 2 else 1000 * (g + 1) + k for k in range(8)}
+
+    rows = [Row(doc_id=g * 1000 + i, **sig(g)) for g in (0, 1) for i in range(150)]
+    pairs = dedupe.lsh_candidate_pairs(
+        spark.createDataFrame(rows), max_bucket=100
+    ).collect()
+    got = {(r["id_a"], r["id_b"]) for r in pairs}
+    assert len(pairs) == 298
+    assert got == {(g * 1000, g * 1000 + i) for g in (0, 1) for i in range(1, 150)}
+
+
 def test_embedding_near_dupes_finds_self_plant(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     plant = emb.limit(1).select(

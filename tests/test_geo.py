@@ -139,6 +139,105 @@ def test_knn_bbox_join(spark):
     assert abs(d1 - 1113.2) < 5  # 0.01 deg lon at equator
 
 
+_TILE_DEG = 360.0 / 4096  # one z=12 tile, in degrees of longitude
+_KNN_LAT = -0.04  # every query and candidate sits in the z=12 tile row below the equator
+_KNN_HALF = 0.00005  # half-width of the candidate boxes, in degrees
+
+
+def _haversine_py(lon1, lat1, lon2, lat2):
+    dlat, dlon = math.radians(lat2 - lat1), math.radians(lon2 - lon1)
+    a = (math.sin(dlat / 2) ** 2
+         + math.sin(dlon / 2) ** 2 * math.cos(math.radians(lat1)) * math.cos(math.radians(lat2)))
+    return geo.EARTH_RADIUS_M * 2 * math.atan2(math.sqrt(a), math.sqrt(1 - a))
+
+
+def _check_knn(out, queries, cands, cand_dist, k, best_effort):
+    """out rows vs a brute-force top-k by (distance, id); queries in
+    best_effort expect only their top 1 (the rest lies beyond max_ring)."""
+    got: dict = {}
+    for r in out:
+        got.setdefault(r["query_id"], []).append((r["rank"], r["id"], r["dist_m"]))
+    assert set(got) == {q for q, _ in queries}
+    for qid, qlon in queries:
+        want = sorted((cand_dist(qlon, c), c[0]) for c in cands)[:k]
+        if qid in best_effort:
+            want = want[:1]
+        have = sorted(got[qid])
+        assert [(rk, i) for rk, i, _ in have] == [(n + 1, i) for n, (_, i) in enumerate(want)], qid
+        for (_, _, d), (wd, _) in zip(have, want):
+            assert abs(d - wd) < 1e-6 * max(wd, 1.0)
+
+
+def _knn_inputs(spark):
+    """Three queries (k=2) and their candidates at _KNN_LAT, as (id, lon)
+    lists and as frames: points, and small boxes around them.
+
+    - query 1 at lon 0: candidates 0.001 deg west (id 11) and east (id 12),
+      tied on distance, and one 0.002 deg east (id 10) -> resolved at ring 1;
+    - query 2 at 0.9 of tile 2389: nearest 0.5 tiles east (id 20), 2nd
+      nearest 1.3 tiles east (id 21), outside the ring-1 3x3 block; a decoy
+      1.6 tiles west (id 22) lies inside it, so ring 1 fails the
+      sufficiency test and ring 2 finds id 21;
+    - query 3 at the middle of tile 2900: one candidate 0.2 tiles east
+      (id 30); the next (id 31) is 40 tiles east, beyond the max_ring=2
+      block, so the result is the best-effort top 1.
+    """
+    q2 = (2389 + 0.9) * _TILE_DEG - 180.0
+    q3 = (2900 + 0.5) * _TILE_DEG - 180.0
+    queries = [(1, 0.0), (2, q2), (3, q3)]
+    cands = [
+        (10, 0.002), (11, -0.001), (12, 0.001),
+        (20, q2 + 0.5 * _TILE_DEG), (21, q2 + 1.3 * _TILE_DEG), (22, q2 - 1.6 * _TILE_DEG),
+        (30, q3 + 0.2 * _TILE_DEG), (31, q3 + 40 * _TILE_DEG),
+    ]
+    q = spark.createDataFrame(
+        [(i, lon, _KNN_LAT) for i, lon in queries], "query_id long, lon double, lat double"
+    )
+    pts = spark.createDataFrame(
+        [(i, lon, _KNN_LAT) for i, lon in cands], "id long, lon double, lat double"
+    )
+    boxes = spark.createDataFrame(
+        [(i, lon - _KNN_HALF, _KNN_LAT - _KNN_HALF, lon + _KNN_HALF, _KNN_LAT + _KNN_HALF)
+         for i, lon in cands],
+        "id long, minx double, miny double, maxx double, maxy double",
+    )
+    return queries, cands, q, pts, boxes
+
+
+def test_knn_join_multi_ring(spark):
+    """knn_join on the three-query fixture: ring 1, ring 2, and the
+    best-effort result at max_ring all match a brute-force top-k."""
+    from osmix_spark.operators import spatial
+
+    queries, cands, q, pts, _ = _knn_inputs(spark)
+
+    def point_dist(qlon, c):
+        return _haversine_py(qlon, _KNN_LAT, c[1], _KNN_LAT)
+
+    out = spatial.knn_join(q, pts, k=2, z=12, max_ring=2).collect()
+    _check_knn(out, queries, cands, point_dist, 2, best_effort={3})
+    # capped at ring 1, query 2 keeps the decoy: its answer needed ring 2
+    ring1 = spatial.knn_join(q, pts, k=2, z=12, max_ring=1).collect()
+    assert sorted((r["rank"], r["id"]) for r in ring1 if r["query_id"] == 2) == [(1, 20), (2, 22)]
+
+
+def test_knn_bbox_join_multi_ring(spark):
+    """knn_bbox_join on the same fixture, candidates as small boxes:
+    distance to the clamped nearest box point, against brute force."""
+    from osmix_spark.operators import spatial
+
+    queries, cands, q, _, boxes = _knn_inputs(spark)
+
+    def box_dist(qlon, c):
+        near = min(max(qlon, c[1] - _KNN_HALF), c[1] + _KNN_HALF)
+        return _haversine_py(qlon, _KNN_LAT, near, _KNN_LAT)
+
+    out = spatial.knn_bbox_join(q, boxes, k=2, z=12, max_ring=2).collect()
+    _check_knn(out, queries, cands, box_dist, 2, best_effort={3})
+    ring1 = spatial.knn_bbox_join(q, boxes, k=2, z=12, max_ring=1).collect()
+    assert sorted((r["rank"], r["id"]) for r in ring1 if r["query_id"] == 2) == [(1, 20), (2, 22)]
+
+
 def test_bbox_overlap_join_wide_boxes_exact(spark):
     """Adaptive split cover must find ALL overlapping pairs regardless of
     box size (regression for the round-1 16x16-cell clamp): compare against

@@ -516,3 +516,23 @@ def test_apply_changeset_all_entity_types(spark):
             100: ([("node", 1, "point")], {"type": "route", "route": "bus"}),
             102: ([("node", 1, "point")], {"type": "route", "route": "train"}),
         }
+
+
+def test_id_pair_sides_keeps_each_pair_once(spark):
+    """IdPairs (changeset.ts:783-801) on a 4-id frame. Unscoped, each pair
+    once with a_id < b_id. Scoped to candidates {2, 3}: the pair with no
+    candidate (1, 4) is dropped, a one-candidate pair keeps its candidate
+    on side a even when it has the larger id, and the two-candidate pair
+    is kept once."""
+    src = spark.createDataFrame([(i, i * 10) for i in (1, 2, 3, 4)], "id long, v long")
+
+    def pairs(candidates=None):
+        a, b, keep_once = merge.id_pair_sides(src, candidates)
+        assert a.columns == ["a_id", "a_v"] and b.columns[:2] == ["b_id", "b_v"]
+        joined = a.crossJoin(b).filter(keep_once)
+        return sorted((r["a_id"], r["b_id"], r["b_v"]) for r in joined.collect())
+
+    assert pairs() == [(1, 2, 20), (1, 3, 30), (1, 4, 40), (2, 3, 30), (2, 4, 40), (3, 4, 40)]
+    # an int-typed id column with a repeated id: cast and deduplicated
+    cands = spark.createDataFrame([(2,), (3,), (3,)], "cid int")
+    assert pairs(cands) == [(2, 1, 10), (2, 3, 30), (2, 4, 40), (3, 1, 10), (3, 4, 40)]

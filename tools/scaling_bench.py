@@ -32,6 +32,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PREP = r"""
 import sys
 sys.path.insert(0, {repo!r})
+import bench  # sentinel_probe: busy-loop wall/cpu ratio + first-touch memory
 from pyspark.sql import functions as F
 from osmix_spark.session import get_spark
 
@@ -106,43 +107,21 @@ def job():
     )
     out.write.format("noop").mode("overwrite").save()
 
-def sentinel():
-    w0, c0 = time.perf_counter(), time.process_time()
-    x = 0
-    for i in range(3_000_000):
-        x = (x + (i ^ (x >> 3))) & 0xFFFFFFFF
-    w = time.perf_counter() - w0
-    c = time.process_time() - c0
-    return round(w / max(c, 1e-9), 3)
-
-def mem_probe():
-    # first-touch backing speed (transparency only: the pre-touched JVM
-    # heap insulates the timed job from this; recorded so a sick-host
-    # window is visible next to the pair it overlapped)
-    import numpy as np
-    t0 = time.perf_counter()
-    a = np.arange(10_000_000, dtype=np.int64)
-    a = a + 1
-    dt = time.perf_counter() - t0
-    del a
-    return round(dt, 3)
-
-sent = [sentinel()]
-mem = [mem_probe()]
+probes = [bench.sentinel_probe()]
 n_pages = pages.count()
 job()  # warm codegen/JIT
 times = []
 for _ in range(3):
     t0 = time.time(); job(); times.append(time.time() - t0)
-sent.append(sentinel())
-mem.append(mem_probe())
+probes.append(bench.sentinel_probe())
 times_sorted = sorted(times)
 best = times_sorted[len(times_sorted) // 2]  # median: robust to bg noise
 spread = (times_sorted[-1] - times_sorted[0]) / best
 print(json.dumps({{"cores": cores, "n_pages": n_pages, "sec": round(best, 3),
                    "rows_per_sec": round(n_pages / best, 1),
                    "times": [round(t,3) for t in times],
-                   "sentinel": sent, "mem_probe": mem,
+                   "sentinel": [p["ratio"] for p in probes],
+                   "mem_probe": [p["mem_wall"] for p in probes],
                    "spread": round(spread, 3)}}))
 spark.stop()
 """
