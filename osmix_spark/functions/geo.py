@@ -68,10 +68,6 @@ def haversine_m(lon1, lat1, lon2, lat2) -> Column:
     return F.lit(EARTH_RADIUS_M) * c
 
 
-def haversine_km(lon1, lat1, lon2, lat2) -> Column:
-    return haversine_m(lon1, lat1, lon2, lat2) / 1000.0
-
-
 # ---------------------------------------------------------------------------
 # slippy tile math (tile.ts)
 # ---------------------------------------------------------------------------

@@ -62,6 +62,22 @@ def _spread(df: DataFrame, *keys: str) -> DataFrame:
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)
 
 
+# Ways per hash key of the vertex shuffle in encode_way_mvt_vertices. A
+# key's vertices stay in one partition, so a block must be small next to
+# the way count divided by defaultParallelism: at 8192, sf0.01 (way ids
+# 0-14,999) had two keys, both hashed to one partition of four; at 64 it
+# has 235, and each of four partitions holds 0.94-1.08x the mean.
+WAY_BLOCK = 64
+
+
+def _by_way_block(df: DataFrame) -> DataFrame:
+    """Hash-partition rows on `way_id div WAY_BLOCK` into
+    defaultParallelism partitions (an explicit count, so AQE does not
+    coalesce them; see _spread)."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(par, F.expr(f"way_id div {WAY_BLOCK}"))
+
+
 MVT_SCHEMA = T.StructType(
     [
         T.StructField("z", T.IntegerType(), False),
@@ -147,7 +163,6 @@ def encode_point_mvt(points_px: DataFrame, layer: str = "points",
 
 
 def encode_way_mvt_vertices(verts: DataFrame, z: int, layer: str = "ways",
-                            id_block: int = 8192,
                             extent: int = mvt.EXTENT,
                             stats_only: bool = False) -> DataFrame:
     """Vertex-direct line-tile pipeline: verts(way_id, s1, s2, lon, lat) —
@@ -168,12 +183,18 @@ def encode_way_mvt_vertices(verts: DataFrame, z: int, layer: str = "ways",
     (way x tile) vertex arrays into Python (~60M cells at sf0.1). Here
     the JVM does only what it is uniquely good at — scan, broadcast join,
     the trig projection (bit-parity with the SQL oracle), ONE 5-column
-    shuffle of un-exploded vertices hashed on `way_id div id_block` —
+    shuffle of un-exploded vertices hashed on `way_id div WAY_BLOCK` —
     and the bounded tile explode + round + varint encode run vectorized
     inside Arrow-batched Python, emitting one frames blob per
-    (tile, id-block) (~#tiles x #blocks rows, KB-scale Arrow traffic).
+    (tile, way block) (KB-scale Arrow traffic) that merge_way_frames
+    concatenates in block order, i.e. way order.
     Parallelism is pinned to defaultParallelism: AQE would coalesce this
     small-by-bytes, CPU-heavy stage into 1-2 tasks and serialize it.
+    The block is small so that the hash spreads vertices over every
+    partition even at small scale (see WAY_BLOCK).
+
+    stats_only=True decodes one blob per (tile, partition) in the same
+    pass and emits its partial stats; the tile rollup is a JVM groupBy.
 
     Reference: vt/encode.ts:22-31,59-260; geo/src/tile.ts:53-79."""
     lo, hi = -mvt.BUFFER_PX, extent + mvt.BUFFER_PX
@@ -185,14 +206,13 @@ def encode_way_mvt_vertices(verts: DataFrame, z: int, layer: str = "ways",
         geo.tile_x_fraction(F.col("lon"), zc).alias("xf"),
         geo.tile_y_fraction(F.col("lat"), zc).alias("yf"),
     )
-    par = verts.sparkSession.sparkContext.defaultParallelism
     # vertex order (way_id, s1, s2) is established by the JVM sort so the
     # Python stage needs neither the lexsort nor the s1/s2 columns at all
     # — 2 of 5 Arrow columns never cross the boundary. Ties in the sort
     # key carry identical coordinates (s2 IS the node ref), so an unstable
     # sort cannot change the encoded bytes.
     dist = (
-        proj.repartition(par, F.expr(f"way_id div {id_block}"))
+        _by_way_block(proj)
         .sortWithinPartitions("way_id", "s1", "s2")
         .select("way_id", "xf", "yf")
     )
@@ -238,11 +258,11 @@ def encode_way_mvt_vertices(verts: DataFrame, z: int, layer: str = "ways",
         ftx = tx0[w_of] + k % ntx[w_of]
         fty = ty0[w_of] + k // ntx[w_of]
         fway = wid[wstart][w_of]
-        # frame order inside each (tile, block) blob: way ascending; block
-        # runs are contiguous because blk is way div id_block
+        # frame order inside each tile: way ascending, so block runs are
+        # contiguous (blk is way div WAY_BLOCK)
         forder = np.lexsort((fway, fty, ftx))
         ftx, fty, fway, w_of = ftx[forder], fty[forder], fway[forder], w_of[forder]
-        fblk = fway // id_block
+        fblk = fway // WAY_BLOCK
         flen = wlen[w_of]
         tot = int(flen.sum())
         v0 = np.zeros(n_feat, dtype=np.int64)
@@ -273,9 +293,9 @@ def encode_way_mvt_vertices(verts: DataFrame, z: int, layer: str = "ways",
         )
         gtx, gty, gblk = ftx[sel], fty[sel], fblk[sel]
         newg = np.ones(len(ids), dtype=bool)
-        newg[1:] = (
-            (gtx[1:] != gtx[:-1]) | (gty[1:] != gty[:-1]) | (gblk[1:] != gblk[:-1])
-        )
+        newg[1:] = (gtx[1:] != gtx[:-1]) | (gty[1:] != gty[:-1])
+        if not stats_only:
+            newg[1:] |= gblk[1:] != gblk[:-1]
         gstarts = np.nonzero(newg)[0]
         g_blen = np.add.reduceat(flens_b, gstarts)
         g_n = np.add.reduceat(np.ones(len(ids), dtype=np.int64), gstarts)
@@ -283,13 +303,15 @@ def encode_way_mvt_vertices(verts: DataFrame, z: int, layer: str = "ways",
         np.cumsum(g_blen[:-1], out=boffs[1:])
         buf = memoryview(frames)
         if stats_only:
-            # Decode each just-encoded (tile, block) blob HERE — the codec
-            # is exercised on the exact bytes assembled above — and emit
-            # per-block partial stats. Every stat is distributive (sums,
+            # Decode each just-encoded (tile, partition) blob HERE — the
+            # codec is exercised on the exact bytes assembled above — and
+            # emit its partial stats. Every stat is distributive (sums,
             # mins, maxes over decoded vertices), so the tile-level rollup
             # is a JVM-side groupBy below: no 40MB frames shuffle, no
             # second Python stage, and the decode parallelism follows the
-            # balanced way-block partitioning instead of tile skew.
+            # balanced way-block partitioning instead of tile skew. One
+            # blob per tile here, not per (tile, block): the blocks are
+            # small, and each blob costs a Python-level decode.
             rows = []
             for g, (o, l) in enumerate(zip(boffs, g_blen)):
                 blob = mvt._len_delim(

@@ -22,6 +22,16 @@ def get_spark(
     """Build (or reuse) a SparkSession.
 
     cores: local[N] parallelism; default $SPARK_GRAFT_CPUS or all cores.
+
+    Python workers fork from `osmix_spark.daemon`, which stops them
+    re-reading every zip archive on the worker path before each task.
+
+    DataFrame debugging is off: PySpark otherwise captures the Python
+    call site of every Column function (four py4j round-trips each),
+    which made up to two thirds of the driver's py4j calls while a query
+    was built. Error messages then lack the Python call site; pass
+    `extra={"spark.python.sql.dataFrameDebugging.enabled": "true"}` to
+    bring it back.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -52,6 +62,8 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "osmix_spark.daemon")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Long-lived drivers (test suites, notebook sessions, streaming
         # jobs) accumulate localCheckpoint/broadcast blocks whose Python
         # references are gone but whose JVM weak refs only get enqueued on

@@ -3,6 +3,7 @@ determinism across parallelism, raster PNG validity."""
 
 from __future__ import annotations
 
+import os
 import zlib
 
 from pyspark.sql import functions as F
@@ -313,6 +314,24 @@ def test_vertex_direct_way_encode_bytes_identical(spark):
         ).collect()
     }
     assert fused == decoded and len(fused) > 0
+
+
+def test_way_vertex_shuffle_uses_every_partition(spark, sf_dir):
+    """The vertex shuffle of encode_way_mvt_vertices spreads sf0.01's
+    60,000 way vertices over every defaultParallelism partition, none
+    above 1.5x the mean: the Python encode then runs on every core."""
+    par = spark.sparkContext.defaultParallelism
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    ways = spark.read.parquet(os.path.join(sf001, "lineitem.parquet")).select(
+        F.col("l_orderkey").alias("way_id")
+    )
+    sizes = [
+        r["count"]
+        for r in tiles._by_way_block(ways)
+        .groupBy(F.spark_partition_id()).count().collect()
+    ]
+    assert len(sizes) == par and sum(sizes) == 60_000
+    assert max(sizes) <= 1.5 * sum(sizes) / par
 
 
 def test_ring_tile_px_replicates_holes(spark):
