@@ -142,16 +142,16 @@ def flagship_pages_pipeline(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from osmix_spark.functions import geo
-    from osmix_spark.sources import synth
+    from osmix_spark.sources import layout, synth
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = layout.read_parquet(spark, f"{sf_dir}/lineitem.parquet")
     page_id = (F.col("l_orderkey") * 16 + F.col("l_linenumber")).alias("page_id")
     pages = li.select(
         page_id,
         synth.clustered_lon(F.col("l_orderkey") * 16 + F.col("l_linenumber")).alias("lon"),
         synth.clustered_lat(F.col("l_orderkey") * 16 + F.col("l_linenumber")).alias("lat"),
     )
-    nodes = spark.read.parquet(f"{sf_dir}/part.parquet").select(
+    nodes = layout.read_parquet(spark, f"{sf_dir}/part.parquet").select(
         F.col("p_partkey").alias("node_id"),
         synth.clustered_lon("p_partkey").alias("lon"),
         synth.clustered_lat("p_partkey").alias("lat"),

@@ -13,6 +13,11 @@ and `jar/org`) and `pyspark.zip` (~11 ms, once per cached sub-package),
 0.2-0.4 s per task even when the task gets no rows. The daemon installs,
 before it forks any worker, a zipimporter whose `invalidate_caches` keeps
 the directory it read.
+
+It also imports pandas and pyarrow before forking. Every Arrow-batched
+task (all of the engine's Python stages) needs both, and a worker that
+imports them itself spends 0.25-0.4 s on its first such task; forked
+children share the daemon's copy instead.
 """
 
 from __future__ import annotations
@@ -32,7 +37,8 @@ class ZipImporter(zipimport.zipimporter):
         pass
 
 
-def main() -> None:
+def prepare() -> None:
+    """The daemon's set-up before it forks any worker."""
     sys.path_hooks[:] = [
         ZipImporter if hook is zipimport.zipimporter else hook
         for hook in sys.path_hooks
@@ -42,6 +48,12 @@ def main() -> None:
     # archive's directory stays in zipimport's own cache, so this re-reads
     # nothing)
     sys.path_importer_cache.clear()
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
+
+
+def main() -> None:
+    prepare()
     from pyspark import daemon
 
     daemon.manager()

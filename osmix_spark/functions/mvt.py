@@ -637,11 +637,7 @@ def _frame_spans(data: bytes):
 
 
 def _layer_stats_fast(layer_buf: bytes):
-    """Vectorized layer stats. The frames region (frame headers + bodies)
-    is one contiguous pure-varint byte stream — feature ids, tag indices,
-    type, and geometry commands are all varints; strings live in the
-    layer's key/value tables outside it — so ONE decode_varints_np pass
-    plus a byte->value-index gather parses every feature header at once.
+    """Vectorized layer stats over the frames that `_frame_spans` finds.
     Returns (name, stats|None); raises ValueError on an irregular frame
     layout."""
     import numpy as np
@@ -656,8 +652,43 @@ def _layer_stats_fast(layer_buf: bytes):
     if len(ts) > 1 and not bool((ts[1:] == be[:-1]).all()):
         raise ValueError(f"MVT layer {name!r}: feature frames not contiguous")
     off = int(ts[0])
-    region_len = int(be[-1]) - off
-    region = layer_buf[off : off + region_len]
+    region = layer_buf[off : int(be[-1])]
+    return name, _frames_stats(name, region, body_starts=bs - off, body_ends=be - off)
+
+
+def frames_stats_np(frames: bytes, frame_lens, name: str = "") -> dict | None:
+    """Decoded-vertex statistics (as decode_tile_stats_np) of back-to-back
+    feature frames whose byte lengths the caller already holds, e.g. from
+    encode_line_frames_np(return_lens=True). The lengths only say where
+    each frame starts; every stat is still parsed from the bytes, and
+    each frame's own tag and length prefix must agree with the given
+    length, or this raises ValueError. None when there are no frames."""
+    import numpy as np
+
+    lens = np.asarray(frame_lens, dtype=np.int64)
+    if not len(lens):
+        return None
+    ends = np.cumsum(lens)
+    if int(ends[-1]) != len(frames) or bool((lens <= 0).any()):
+        raise ValueError(
+            f"MVT layer {name!r}: frame lengths do not tile {len(frames)} bytes"
+        )
+    return _frames_stats(name, frames, frame_ends=ends)
+
+
+def _frames_stats(name: str, region: bytes, body_starts=None, body_ends=None,
+                  frame_ends=None) -> dict:
+    """Stats of a frames region: one contiguous pure-varint byte stream of
+    frame headers and bodies (feature ids, tag indices, type and geometry
+    commands are all varints; strings live in the layer's key/value
+    tables outside it), so ONE decode_varints_np pass plus a byte->value
+    index gather parses every feature header at once. The frames are
+    located by their body byte spans, or by their frame end offsets, in
+    which case each frame's tag and body length are read and checked
+    against them. Raises ValueError on an irregular frame layout."""
+    import numpy as np
+
+    region_len = len(region)
     vals, start_pos = decode_varints_np(region)
     nv = len(vals)
     # byte offset -> value index (sentinel nv at region end; -1 elsewhere)
@@ -677,7 +708,19 @@ def _layer_stats_fast(layer_buf: bytes):
     def spat(idx):
         return sp_p[np.minimum(idx, top)]
 
-    v = b2v[bs - off]
+    if frame_ends is not None:
+        # frame = tag(2, LEN) + body length + body, ending where the
+        # given length says
+        ts = np.concatenate([[0], frame_ends[:-1]])
+        vt = b2v[ts]
+        body_starts = spat(vt + 2)
+        body_ends = body_starts + gat(vt + 1).astype(np.int64)
+        ok = (vt >= 0) & (gat(vt) == 18) & (body_ends == frame_ends)
+        if not bool(ok.all()):
+            raise ValueError(
+                f"MVT layer {name!r}: frame lengths disagree with the frame bytes"
+            )
+    v = b2v[body_starts]
     ok = v >= 0
     # field 1 (id), optional
     has_id = gat(v) == 8
@@ -695,7 +738,7 @@ def _layer_stats_fast(layer_buf: bytes):
     ok &= gat(v + 2) == 34
     glen = gat(v + 3).astype(np.int64)
     geom_end_byte = spat(v + 4) + glen
-    ok &= geom_end_byte == be - off  # geometry closes the body exactly
+    ok &= geom_end_byte == body_ends  # geometry closes the body exactly
     geom_end_v = b2v[np.clip(geom_end_byte, 0, region_len)]
     vstarts = v + 4
     vcounts = geom_end_v - vstarts
@@ -703,7 +746,7 @@ def _layer_stats_fast(layer_buf: bytes):
     if not bool(ok.all()):
         raise ValueError(f"MVT layer {name!r}: irregular feature frame layout")
     X, Y = _xy_from_geoms(vals, vstarts, vcounts, types_arr, np)
-    return name, _stats_dict(int(ids.sum()), len(ids), X, Y)
+    return _stats_dict(int(ids.sum()), len(ids), X, Y)
 
 
 def encode_polygon_frames_np(ids, xs, ys, ring_lens, rings_per_feat) -> bytes:

@@ -311,13 +311,16 @@ def encode_way_mvt_vertices(verts: DataFrame, z: int, layer: str = "ways",
             # second Python stage, and the decode parallelism follows the
             # balanced way-block partitioning instead of tile skew. One
             # blob per tile here, not per (tile, block): the blocks are
-            # small, and each blob costs a Python-level decode.
+            # small, and each blob costs a Python-level decode. The
+            # encoder's frame lengths locate the frames, so the decode
+            # needs no byte-at-a-time walk (it checks them against the
+            # bytes).
+            gends = np.append(gstarts[1:], len(ids))
             rows = []
             for g, (o, l) in enumerate(zip(boffs, g_blen)):
-                blob = mvt._len_delim(
-                    3, mvt.layer_wrap(layer, bytes(buf[int(o) : int(o + l)]))
+                s = mvt.frames_stats_np(
+                    buf[int(o) : int(o + l)], flens_b[gstarts[g] : gends[g]], layer
                 )
-                s = mvt.decode_tile_stats_np(blob).get(layer)
                 if s is not None and s["n_features"]:
                     rows.append(
                         {"z": zz, "tx": int(gtx[gstarts[g]]),

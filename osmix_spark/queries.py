@@ -24,7 +24,7 @@ from .functions import geo, s2 as s2f, text
 from .functions.hashing import (portable_hash64, portable_hash64_pair_sql,
                                 portable_hash64_sql)
 from .operators import merge, spatial
-from .sources import synth
+from .sources import layout, synth
 
 Query = Callable[[SparkSession, str], DataFrame]
 
@@ -71,7 +71,7 @@ def all_oracles() -> dict[str, str]:
 
 
 def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    return layout.read_parquet(spark, f"{sf_dir}/{table}.parquet")
 
 
 # ---------------------------------------------------------------------------

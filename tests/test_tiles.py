@@ -434,6 +434,29 @@ def test_decoded_stats_irregular_layer_raises():
         mvt.decode_tile_stats_np(buf)
 
 
+def test_frames_stats_given_lengths_match_bytes():
+    """Stats located by the encoder's frame lengths equal the byte walk's;
+    a length that disagrees with the bytes is an error, not a different
+    decode."""
+    import numpy as np
+    import pytest
+
+    frames, lens = mvt.encode_line_frames_np(
+        [4, 9, 300], [0, 5, 1, 7, 2, 4096, -64, 3], [0, 5, 2, 8, 3, 1, 4160, 9],
+        [2, 3, 3], return_lens=True,
+    )
+    buf = mvt._len_delim(3, mvt.layer_wrap("w", frames))
+    assert mvt.frames_stats_np(frames, lens, "w") == mvt.decode_tile_stats_np(buf)["w"]
+    assert mvt.frames_stats_np(b"", np.zeros(0, dtype=np.int64)) is None
+    bad = lens.copy()
+    bad[0] += 1
+    bad[1] -= 1
+    with pytest.raises(ValueError, match="'w'"):
+        mvt.frames_stats_np(frames, bad, "w")
+    with pytest.raises(ValueError, match="'w'"):
+        mvt.frames_stats_np(frames, lens[:-1], "w")
+
+
 def test_polygon_ring_fully_off_tile_collapses(spark):
     """A ring entirely beyond the 64 px buffer clamps to a degenerate
     (< 4 distinct vertex) shape and is dropped, like the scalar path."""
