@@ -134,10 +134,12 @@ def flagship_pages_pipeline(spark, sf_dir: str):
     """Geocode 'pages' (lineitem-scale synthetic points) -> cell assign ->
     spatial join vs the part-derived node layer -> per-tile aggregation.
 
-    Returns (n_pages, result_df). The big side is scanned once, keyed by
-    cell, and joined against a broadcast node layer — at cluster scale the
-    node layer is the smaller OSM dim and this stays a broadcast join;
-    the groupBy(cell) shuffle is the single exchange.
+    Returns (pages_df, result_df), both lazy: the call launches no Spark
+    job, so a caller that needs the page count runs it itself. The big
+    side is scanned once, keyed by cell, and joined against a broadcast
+    node layer — at cluster scale the node layer is the smaller OSM dim
+    and this stays a broadcast join; the groupBy(cell) shuffle is the
+    single exchange.
     """
     from pyspark.sql import functions as F
 
@@ -167,8 +169,7 @@ def flagship_pages_pipeline(spark, sf_dir: str):
             F.sum("n_nodes").alias("node_hits"),
         )
     )
-    n_pages = li.count()
-    return n_pages, joined
+    return pages, joined
 
 
 def run_worker(spec_path: str) -> None:
@@ -197,8 +198,8 @@ def run_worker(spec_path: str) -> None:
 
     for name in spec["queries"]:
         if name == FLAGSHIP:
-            n_pages, result = flagship_pages_pipeline(spark, sf_dir)
-            out["flagship_pages"] = n_pages
+            pages, result = flagship_pages_pipeline(spark, sf_dir)
+            out["flagship_pages"] = pages.count()
             mk = lambda: result  # noqa: E731
         else:
             fn = qs[name]

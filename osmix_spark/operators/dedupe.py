@@ -17,10 +17,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions import text
 from ..functions.hashing import portable_hash64, portable_hash64_pair
+from ..plans import fixpoint
 
 _MOD = 1_000_000_007
 
@@ -386,10 +386,10 @@ def connected_components(pairs: DataFrame, a: str = "id_a", b: str = "id_b",
     twice); labels start at least(id, min neighbor) — the first
     propagation folded into init; each round is one join + union + groupBy
     min (the self row makes every id present, so no left join is needed)
-    followed by the pointer jump; for integral ids convergence is read
-    from the label checksum (labels only ever decrease toward the
-    component minimum, so an unchanged sum IS the fixpoint — no per-round
-    change-join); other id types take the change-join probe."""
+    followed by the pointer jump. The self row also carries the id's
+    previous label through the min, and the count of ids whose label
+    changed is observed on the round's checkpoint: one exact change
+    detector for every id type, with no arithmetic and no probe job."""
     e = F.explode(F.array(
         F.struct(F.col(a).alias("src"), F.col(b).alias("dst")),
         F.struct(F.col(b).alias("src"), F.col(a).alias("dst")),
@@ -401,45 +401,19 @@ def connected_components(pairs: DataFrame, a: str = "id_a", b: str = "id_b",
         .select("id", F.least("id", "mn").alias("component"))
         .localCheckpoint()
     )
-    id_type = labels.schema["component"].dataType
-    integral_ids = isinstance(
-        id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ) or (isinstance(id_type, T.DecimalType) and id_type.scale == 0)
-
-    def _unchanged(prev_sum, frame, prev_frame):
-        # labels are pointwise monotone non-increasing over a fixed id set,
-        # so for integral ids an exact decimal sum is a sufficient change
-        # detector; every other id type (float, double and fractional
-        # decimals, whose decimal(38,0) cast can round a change away, or
-        # strings) falls back to an anti-equality probe
-        if integral_ids:
-            s = frame.agg(
-                F.sum(F.col("component").cast("decimal(38,0)"))
-            ).first()[0]
-            return (s == prev_sum), s
-        chg = (
-            frame.join(prev_frame.withColumnRenamed("component", "__p"), "id")
-            .filter(F.col("component") != F.col("__p"))
-        )
-        return chg.isEmpty(), None
-
-    prev_sum = None
-    if integral_ids:
-        _, prev_sum = _unchanged(None, labels, None)
     converged = False
     for _ in range(max_iters):
         msgs = labels.join(edges, labels.id == edges.src).select(
-            F.col("dst").alias("id"), "component"
+            F.col("dst").alias("id"), "component", F.lit(None).alias("prev")
         )
-        prop = (
-            msgs.unionByName(labels.select("id", "component"))
+        prop, seen = fixpoint.checkpoint(
+            msgs.unionByName(labels.select("id", "component", F.col("component").alias("prev")))
             .groupBy("id")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint()
+            .agg(F.min("component").alias("component"), F.max("prev").alias("prev")),
+            changed=F.count_if(F.col("component") != F.col("prev")),
         )
-        same, s = _unchanged(prev_sum, prop, labels)
-        if same:
-            labels = prop
+        if not seen["changed"]:
+            labels = prop.drop("prev")
             converged = True
             break
         # pointer jumping: component <- label(component); labels only ever
@@ -451,8 +425,6 @@ def connected_components(pairs: DataFrame, a: str = "id_a", b: str = "id_b",
         labels = prop.join(comp_map, "component", "left").select(
             "id", F.coalesce("__c2", "component").alias("component")
         ).localCheckpoint()
-        if integral_ids:
-            _, prev_sum = _unchanged(None, labels, None)
     if not converged:
         # silently returning unconverged labels would hand dedupe_clusters
         # wrong survivors with no signal; pointer jumping makes the round

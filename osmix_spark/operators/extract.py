@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import geo
+from ..plans import fixpoint
 
 
 def extract(
@@ -124,18 +125,24 @@ def extract(
         ["member_ref", "member_type"],
         "left_semi",
     )
-    surviving = entity_members.select("relation_id").distinct()
+    rows = F.count(F.lit(1))
+    surviving, seen = fixpoint.checkpoint(
+        entity_members.select("relation_id").distinct(), n=rows
+    )
     rel_members = relation_members.filter(F.col("member_type") == "relation")
     for _ in range(10):
         step = rel_members.join(
             surviving.withColumnRenamed("relation_id", "member_ref"),
             "member_ref", "left_semi",
         )
-        grown = surviving.unionByName(step.select("relation_id")).distinct()
-        if grown.exceptAll(surviving).isEmpty():
-            surviving = grown
+        grown, now = fixpoint.checkpoint(
+            surviving.unionByName(step.select("relation_id")).distinct(), n=rows
+        )
+        # grown holds surviving and both are distinct, so an equal row
+        # count means nothing was added
+        if now["n"] == seen["n"]:
             break
-        surviving = grown
+        surviving, seen = grown, now
     # kept member rows are computed ONCE from the converged survivor set —
     # no per-iteration accumulation, and no distinct(): OSM allows the same
     # (type, ref, role) member to repeat within a relation and the
@@ -163,12 +170,16 @@ def resolve_relation_members(relation_members: DataFrame, max_depth: int = 10) -
     leaf = relation_members.filter(F.col("member_type") != "relation").select(
         "relation_id", "member_type", "member_ref"
     )
-    pending = relation_members.filter(F.col("member_type") == "relation").select(
-        "relation_id", F.col("member_ref").alias("child")
+    rows = F.count(F.lit(1))
+    pending, seen = fixpoint.checkpoint(
+        relation_members.filter(F.col("member_type") == "relation").select(
+            "relation_id", F.col("member_ref").alias("child")
+        ),
+        n=rows,
     )
     out = leaf
     for _ in range(max_depth):
-        if pending.isEmpty():
+        if not seen["n"]:
             break
         # expand one level: children's leaf members attach to the ancestor
         step = pending.join(
@@ -182,7 +193,10 @@ def resolve_relation_members(relation_members: DataFrame, max_depth: int = 10) -
                 "relation_id", "member_type", "member_ref"
             )
         )
-        pending = step.filter(F.col("member_type") == "relation").select(
-            "relation_id", F.col("member_ref").alias("child")
+        pending, seen = fixpoint.checkpoint(
+            step.filter(F.col("member_type") == "relation").select(
+                "relation_id", F.col("member_ref").alias("child")
+            ),
+            n=rows,
         )
     return out.distinct()

@@ -41,6 +41,7 @@ from pyspark.sql.window import Window
 
 from ..functions import geo
 from ..functions.hashing import portable_hash64
+from ..plans import fixpoint
 from . import spatial
 
 DEDUPE_RADIUS_M = 1.0  # changeset.ts:248-249 (0.001 km)
@@ -169,31 +170,27 @@ def _best_winner(winners: DataFrame) -> DataFrame:
 
 def flatten_replacements(repl: DataFrame, max_iters: int = 16) -> DataFrame:
     """A->B, B->C  =>  A->C (changeset.ts:57-77), iterative with a cycle
-    guard: each round rewrites to_id through the map; stops when no row
-    changed. Cycles (to_id chains that never leave the key set) are broken
-    by dropping the self-referential hop, mirroring the reference's throw —
+    guard: each round rewrites to_id through the map and is checkpointed
+    with its count of advanced rows observed; it stops when none advanced.
+    Cycles (to_id chains that never leave the key set) are broken by
+    dropping the self-referential hop, mirroring the reference's throw —
     we assert none exist in tests."""
-    repl = repl.filter(F.col("from_id") != F.col("to_id")).cache()
+    # the input is not checkpointed first: round 1's checkpoint reads it on
+    # both join sides, and AQE runs its shuffles once for both
+    repl = repl.filter(F.col("from_id") != F.col("to_id"))
     for _ in range(max_iters):
-        nxt = repl.alias("r").join(
-            repl.select(
-                F.col("from_id").alias("to_id"), F.col("to_id").alias("next_id")
-            ).alias("n"),
+        nxt = repl.join(
+            repl.select(F.col("from_id").alias("to_id"), F.col("to_id").alias("next_id")),
             "to_id",
             "left",
         )
-        advanced = nxt.filter(
-            F.col("next_id").isNotNull() & (F.col("next_id") != F.col("from_id"))
-        )
-        if advanced.isEmpty():
-            break
+        advance = F.col("next_id").isNotNull() & (F.col("next_id") != F.col("from_id"))
+        nxt, seen = fixpoint.checkpoint(nxt, advanced=F.count_if(advance))
         repl = nxt.select(
-            F.col("from_id"),
-            F.when(
-                F.col("next_id").isNotNull() & (F.col("next_id") != F.col("from_id")),
-                F.col("next_id"),
-            ).otherwise(F.col("to_id")).alias("to_id"),
-        ).cache()
+            "from_id", F.when(advance, F.col("next_id")).otherwise(F.col("to_id")).alias("to_id")
+        )
+        if not seen["advanced"]:
+            break
     return repl.filter(F.col("from_id") != F.col("to_id"))
 
 

@@ -9,7 +9,11 @@ relaxation (the Pregel/Bellman-Ford pattern): each round joins the frontier
 against the edge list, keeps per-node min(dist, via) with a deterministic
 struct-min tiebreak, and re-checkpoints (`localCheckpoint`) to cut lineage.
 The fixpoint equals Dijkstra's output exactly (same shortest-path metric);
-rounds are bounded by the hop count of the longest shortest path.
+rounds are bounded by the hop count of the longest shortest path. Every
+search shares one relax step (`_relax`), and each round's stop test (rows
+improved, their minimum, the target's label) is observed on the round's
+own checkpoint (`plans.fixpoint.checkpoint`), not probed by a job of its
+own.
 
 Scale notes: per round there is ONE shuffle (groupBy node); the edge list
 can be broadcast when it is the small side (road networks are ~edges≈2.3x
@@ -19,10 +23,11 @@ and edges on the join key instead — pass broadcast_edges=False).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import geo
+from ..plans import fixpoint
 
 
 def build_edges(ways: DataFrame, nodes: DataFrame,
@@ -65,6 +70,47 @@ def build_edges(ways: DataFrame, nodes: DataFrame,
     return fwd.unionByName(rev)
 
 
+def _start(spark, node: int) -> DataFrame:
+    """The label table of a search from `node`: (node, 0.0, via=node)."""
+    return spark.createDataFrame(
+        [(node, 0.0, node)], "node long, dist double, via long"
+    ).localCheckpoint()
+
+
+def _relax(frontier: DataFrame, dist: DataFrame, edges: DataFrame,
+           **metrics: Column) -> tuple[DataFrame, dict, DataFrame]:
+    """One label-correcting round: relax the frontier's out-edges, keep the
+    nodes whose label improved (per-node min (dist, via) struct, so
+    equal-cost ties pick the smallest predecessor id) and fold them into
+    `dist` (per-node min over old and improved: one shuffle, no join).
+
+    Returns (improved, seen, dist). `improved` is checkpointed, and its
+    row count seen["n"], its smallest dist seen["min"] and any extra
+    `metrics` are observed on that checkpoint's job. When n is 0, `dist`
+    comes back unchanged."""
+    cand = frontier.join(edges, frontier["node"] == edges["src"]).select(
+        edges["dst"].alias("node"),
+        (frontier["dist"] + edges["w"]).alias("dist"),
+        edges["src"].alias("via"),
+    )
+    best = cand.groupBy("node").agg(F.min(F.struct("dist", "via")).alias("b"))
+    improved, seen = fixpoint.checkpoint(
+        best.join(dist.select("node", F.col("dist").alias("old")), "node", "left")
+        .filter(F.col("old").isNull() | (F.col("b.dist") < F.col("old")))
+        .select("node", F.col("b.dist").alias("dist"), F.col("b.via").alias("via")),
+        n=F.count(F.lit(1)), min=F.min("dist"), **metrics,
+    )
+    if seen["n"]:
+        dist = (
+            dist.unionByName(improved)
+            .groupBy("node")
+            .agg(F.min(F.struct("dist", "via")).alias("b"))
+            .select("node", F.col("b.dist").alias("dist"), F.col("b.via").alias("via"))
+            .localCheckpoint()
+        )
+    return improved, seen, dist
+
+
 def shortest_path(edges: DataFrame, source: int, max_rounds: int = 200,
                   broadcast_edges: bool = True) -> DataFrame:
     """Single-source shortest path to every reachable node. Returns
@@ -76,46 +122,21 @@ def shortest_path(edges: DataFrame, source: int, max_rounds: int = 200,
     each round relaxes only the frontier (nodes improved last round), so
     total work is O(sum of frontier degrees), not O(V*E).
     """
-    spark = edges.sparkSession
     # materialize the edge list ONCE — every round's job would otherwise
     # recompute (and re-read) the whole upstream edge plan
     e = edges.select("src", "dst", "w").localCheckpoint()
     if broadcast_edges:
         e = F.broadcast(e)
-    dist = spark.createDataFrame(
-        [(source, 0.0, source)], "node long, dist double, via long"
-    ).localCheckpoint()
-    frontier = dist
+    dist = frontier = _start(edges.sparkSession, source)
     for _ in range(max_rounds):
-        cand = frontier.join(e, frontier["node"] == e["src"]).select(
-            e["dst"].alias("node"),
-            (frontier["dist"] + e["w"]).alias("dist"),
-            e["src"].alias("via"),
-        )
-        best = cand.groupBy("node").agg(F.min(F.struct("dist", "via")).alias("b"))
-        improved = (
-            best.join(dist.select("node", F.col("dist").alias("old")), "node", "left")
-            .filter(F.col("old").isNull() | (F.col("b.dist") < F.col("old")))
-            .select("node", F.col("b.dist").alias("dist"), F.col("b.via").alias("via"))
-            .localCheckpoint()
-        )
-        if improved.isEmpty():
+        frontier, seen, dist = _relax(frontier, dist, e)
+        if not seen["n"]:
             break
-        # merge = per-node min over (old, improved): one shuffle, no join
-        dist = (
-            dist.unionByName(improved)
-            .groupBy("node")
-            .agg(F.min(F.struct("dist", "via")).alias("b"))
-            .select("node", F.col("b.dist").alias("dist"), F.col("b.via").alias("via"))
-            .localCheckpoint()
-        )
-        frontier = improved
     return dist
 
 
 def astar_distance(edges: DataFrame, nodes: DataFrame, source: int, target: int,
-                   max_rounds: int = 200, broadcast_edges: bool = True,
-                   probe_every: int = 1) -> DataFrame:
+                   max_rounds: int = 200, broadcast_edges: bool = True) -> DataFrame:
     """Goal-directed s->t shortest path (A*, reference
     algorithms/shortest-path.ts:127): the label-correcting fixpoint with the
     frontier PRUNED by the admissible great-circle heuristic — a frontier
@@ -127,13 +148,11 @@ def astar_distance(edges: DataFrame, nodes: DataFrame, source: int, target: int,
 
     nodes: (id, lon, lat) for the heuristic. Scale shape matches
     shortest_path: one shuffle per round, plus a broadcast join of the
-    frontier against the (small per-round) coordinate lookup; the
-    upper-bound check is a 1-row aggregate per round.
-
-    probe_every=k runs the driver-side target probe + frontier prune only
-    every k-th round: at billion-node scale the per-round 1-row collect is
-    round-trip chatter, and deferring it only delays pruning (the result
-    is the same fixpoint; exactness-tested at k=3).
+    frontier against the (small per-round) coordinate lookup. The best
+    known cost is a running minimum of the target's label over each
+    round's improvements (the label changes only in a round that improves
+    it), observed on the round's checkpoint like the pruned frontier's
+    size, so no round runs a probe job of its own.
     """
     spark = edges.sparkSession
     e = edges.select("src", "dst", "w").localCheckpoint()
@@ -142,61 +161,34 @@ def astar_distance(edges: DataFrame, nodes: DataFrame, source: int, target: int,
     tgt = nodes.filter(F.col("id") == target).select("lon", "lat").collect()
     if not tgt:
         return spark.createDataFrame([], "node long, dist double, via long")
-    tlon, tlat = float(tgt[0]["lon"]), float(tgt[0]["lat"])
+    h = geo.haversine_m(F.col("lon"), F.col("lat"),
+                        F.lit(float(tgt[0]["lon"])), F.lit(float(tgt[0]["lat"])))
     coords = nodes.select(F.col("id").alias("node"), "lon", "lat").localCheckpoint()
+    to_target = F.min(F.when(F.col("node") == target, F.col("dist")))
 
-    dist = spark.createDataFrame(
-        [(source, 0.0, source)], "node long, dist double, via long"
-    ).localCheckpoint()
-    frontier = dist
-    ub = None  # best known s->t cost
-    for round_i in range(max_rounds):
-        cand = frontier.join(e, frontier["node"] == e["src"]).select(
-            e["dst"].alias("node"),
-            (frontier["dist"] + e["w"]).alias("dist"),
-            e["src"].alias("via"),
-        )
-        best = cand.groupBy("node").agg(F.min(F.struct("dist", "via")).alias("b"))
-        improved = (
-            best.join(dist.select("node", F.col("dist").alias("old")), "node", "left")
-            .filter(F.col("old").isNull() | (F.col("b.dist") < F.col("old")))
-            .select("node", F.col("b.dist").alias("dist"), F.col("b.via").alias("via"))
-            .localCheckpoint()
-        )
-        if improved.isEmpty():
+    dist = frontier = _start(spark, source)
+    ub = 0.0 if source == target else None  # best known s->t cost
+    for _ in range(max_rounds):
+        frontier, seen, dist = _relax(frontier, dist, e, tgt=to_target)
+        if not seen["n"]:
             break
-        dist = (
-            dist.unionByName(improved)
-            .groupBy("node")
-            .agg(F.min(F.struct("dist", "via")).alias("b"))
-            .select("node", F.col("b.dist").alias("dist"), F.col("b.via").alias("via"))
-            .localCheckpoint()
-        )
-        frontier = improved
-        if (round_i + 1) % probe_every != 0:
-            continue
-        # probe the full dist table (not this round's improvements) so a
-        # target label set in an unprobed round is still seen
-        hit = dist.filter(F.col("node") == target).select(F.min("dist")).collect()
-        if hit and hit[0][0] is not None:
-            ub = float(hit[0][0]) if ub is None else min(ub, float(hit[0][0]))
+        if seen["tgt"] is not None:
+            ub = seen["tgt"] if ub is None else min(ub, seen["tgt"])
         if ub is not None:
-            h = geo.haversine_m(F.col("lon"), F.col("lat"), F.lit(tlon), F.lit(tlat))
-            frontier = (
+            frontier, kept = fixpoint.checkpoint(
                 frontier.join(coords, "node", "left")
                 .filter(F.col("lon").isNull() | (F.col("dist") + h <= F.lit(ub)))
-                .select("node", "dist", "via")
-                .localCheckpoint()
+                .select("node", "dist", "via"),
+                n=F.count(F.lit(1)),
             )
-            if frontier.isEmpty():
+            if not kept["n"]:
                 break
     return dist
 
 
 def bidirectional_distance(edges: DataFrame, source: int, target: int,
                            max_rounds: int = 200,
-                           broadcast_edges: bool = True,
-                           probe_every: int = 1):
+                           broadcast_edges: bool = True):
     """Bidirectional s->t search (reference algorithms/bidirectional.ts:20):
     forward fixpoint from `source` and backward fixpoint from `target` over
     the reversed edge list advance in lockstep; after each round the best
@@ -206,23 +198,15 @@ def bidirectional_distance(edges: DataFrame, source: int, target: int,
     (exactness argument in tests/test_router.py). Returns
     (dist_f, dist_b, mu, meet_node); mu is None if unreachable.
 
-    probe_every=k runs the driver-side mu probe + termination check only
-    every k-th round (billion-node graphs: per-round collects are
-    round-trip chatter); a stale mu only delays the stop, never breaks
-    exactness, and with k > 1 the returned (mu, meet) are recomputed
-    exactly from the full dist_f x dist_b meeting set after the loop.
+    Each frontier's size and minimum are observed on its own checkpoint;
+    the one probe job a round is the meeting-cost collect, which joins
+    this round's improvements against the other side's labels.
     """
     spark = edges.sparkSession
-
-    def init(node: int) -> DataFrame:
-        return spark.createDataFrame(
-            [(node, 0.0, node)], "node long, dist double, via long"
-        ).localCheckpoint()
-
     if source == target:
         # trivial meeting at the shared endpoint — the improvement-driven mu
         # probe below would otherwise report the best out-and-back cycle
-        d = init(source)
+        d = _start(spark, source)
         return d, d, 0.0, source
 
     e = edges.select("src", "dst", "w").localCheckpoint()
@@ -230,93 +214,47 @@ def bidirectional_distance(edges: DataFrame, source: int, target: int,
     if broadcast_edges:
         e, er = F.broadcast(e), F.broadcast(er)
 
-    dist_f, dist_b = init(source), init(target)
+    def expand(frontier: DataFrame | None, dist: DataFrame, edge: DataFrame):
+        """(improved frontier or None, its min dist, merged dist)."""
+        if frontier is None:
+            return None, None, dist
+        improved, seen, dist = _relax(frontier, dist, edge)
+        return (improved, seen["min"], dist) if seen["n"] else (None, None, dist)
+
+    dist_f, dist_b = _start(spark, source), _start(spark, target)
     fr_f, fr_b = dist_f, dist_b
     mu, meet = None, None
-
-    def expand(frontier: DataFrame, dist: DataFrame, edge: DataFrame):
-        cand = frontier.join(edge, frontier["node"] == edge["src"]).select(
-            edge["dst"].alias("node"),
-            (frontier["dist"] + edge["w"]).alias("dist"),
-            edge["src"].alias("via"),
-        )
-        best = cand.groupBy("node").agg(F.min(F.struct("dist", "via")).alias("b"))
-        improved = (
-            best.join(dist.select("node", F.col("dist").alias("old")), "node", "left")
-            .filter(F.col("old").isNull() | (F.col("b.dist") < F.col("old")))
-            .select("node", F.col("b.dist").alias("dist"), F.col("b.via").alias("via"))
-            .localCheckpoint()
-        )
-        if improved.isEmpty():
-            return None, dist
-        merged = (
-            dist.unionByName(improved)
-            .groupBy("node")
-            .agg(F.min(F.struct("dist", "via")).alias("b"))
-            .select("node", F.col("b.dist").alias("dist"), F.col("b.via").alias("via"))
-            .localCheckpoint()
-        )
-        return improved, merged
-
-    for round_i in range(max_rounds):
-        new_f, dist_f = expand(fr_f, dist_f, e) if fr_f is not None else (None, dist_f)
-        new_b, dist_b = expand(fr_b, dist_b, er) if fr_b is not None else (None, dist_b)
-        if new_f is None and new_b is None:
+    for _ in range(max_rounds):
+        fr_f, min_f, dist_f = expand(fr_f, dist_f, e)
+        fr_b, min_b, dist_b = expand(fr_b, dist_b, er)
+        if fr_f is None and fr_b is None:
             break
-        fr_f, fr_b = new_f, new_b
-        if (round_i + 1) % probe_every != 0:
-            continue
-        if probe_every == 1:
-            # every round is probed, so any NEW meeting involves a node
-            # improved THIS round on at least one side — probing
-            # improvements x other-dist is sufficient and strictly cheaper
-            # than the full dist_f x dist_b join (round-4 ADVICE)
-            parts = []
-            if new_f is not None:
-                parts.append(
-                    new_f.select("node", F.col("dist").alias("df")).join(
-                        dist_b.select("node", F.col("dist").alias("db")), "node"
-                    )
+        # any NEW meeting involves a node improved THIS round on at least
+        # one side — probing improvements x other-dist is sufficient and
+        # strictly cheaper than the full dist_f x dist_b join
+        parts = []
+        if fr_f is not None:
+            parts.append(
+                fr_f.select("node", F.col("dist").alias("df")).join(
+                    dist_b.select("node", F.col("dist").alias("db")), "node"
                 )
-            if new_b is not None:
-                parts.append(
-                    dist_f.select("node", F.col("dist").alias("df")).join(
-                        new_b.select("node", F.col("dist").alias("db")), "node"
-                    )
-                )
-            cand = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-        else:
-            # with k > 1, meetings from unprobed rounds must still be seen:
-            # probe the FULL dist tables
-            cand = dist_f.select("node", F.col("dist").alias("df")).join(
-                dist_b.select("node", F.col("dist").alias("db")), "node"
             )
+        if fr_b is not None:
+            parts.append(
+                dist_f.select("node", F.col("dist").alias("df")).join(
+                    fr_b.select("node", F.col("dist").alias("db")), "node"
+                )
+            )
+        cand = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
         top = (
             cand.select("node", (F.col("df") + F.col("db")).alias("mu"))
             .orderBy("mu", "node").limit(1).collect()
         )
         if top and (mu is None or float(top[0]["mu"]) < mu):
             mu, meet = float(top[0]["mu"]), int(top[0]["node"])
-        if mu is not None:
-            mins = []
-            for fr in (fr_f, fr_b):
-                if fr is None:
-                    mins.append(None)
-                    continue
-                m = fr.select(F.min("dist")).collect()[0][0]
-                mins.append(float(m) if m is not None else None)
-            if mins[0] is not None and mins[1] is not None and mins[0] + mins[1] >= mu:
-                break
-    if probe_every > 1:
-        # exact final (mu, meet) regardless of which rounds were probed
-        top = (
-            dist_f.select("node", F.col("dist").alias("df"))
-            .join(dist_b.select("node", F.col("dist").alias("db")), "node")
-            .select("node", (F.col("df") + F.col("db")).alias("mu"))
-            .orderBy("mu", "node").limit(1).collect()
-        )
-        if top:
-            mu, meet = float(top[0]["mu"]), int(top[0]["node"])
+        if mu is not None and min_f is not None and min_b is not None \
+                and min_f + min_b >= mu:
+            break
     return dist_f, dist_b, mu, meet
 
 
@@ -378,24 +316,18 @@ def reconstruct_path_df(dist: DataFrame, target: int,
     # path of exactly max_hops needs ceil(log2(max_hops + 1)) tables
     k = max(1, math.ceil(math.log2(max(2, max_hops + 1))))
     for _ in range(k - 1):
-        if j.filter(F.col("steps") > 0).join(
-            j.select(F.col("node").alias("anc"), F.col("steps").alias("s2")).filter(F.col("s2") > 0),
-            "anc", "left_semi",
-        ).isEmpty():
-            break  # every chain already resolves to the source
-        a = j.alias("a")
-        b = j.select(
-            F.col("node").alias("anc"), F.col("anc").alias("anc2"),
-            F.col("steps").alias("steps2"),
-        ).alias("b")
-        j = (
-            a.join(b, "anc")
-            .select(
-                F.col("a.node").alias("node"), F.col("anc2").alias("anc"),
-                (F.col("a.steps") + F.col("steps2")).alias("steps"),
-            )
-            .localCheckpoint()
+        # J_{k+1}(n) = J_k(J_k(n)); it differs from J_k only on rows where
+        # both hops advanced, so when none did the table is dropped: every
+        # chain already resolves to the source
+        hop = j.select(F.col("node").alias("anc"), F.col("anc").alias("anc2"),
+                       F.col("steps").alias("steps2"))
+        nxt, seen = fixpoint.checkpoint(
+            j.join(hop, "anc").select("node", F.col("anc2").alias("anc"), "steps", "steps2"),
+            advanced=F.count_if((F.col("steps") > 0) & (F.col("steps2") > 0)),
         )
+        if not seen["advanced"]:
+            break
+        j = nxt.select("node", "anc", (F.col("steps") + F.col("steps2")).alias("steps"))
         jumps.append(j)
 
     rows = spark.createDataFrame([(0, target)], "pos long, node long")

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -21,6 +22,31 @@ os.environ.setdefault("SPARK_DRIVER_MEM", "12g")
 def spark():
     s = get_spark("osmix-tests", cores=4, shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """run(fn) -> (fn's result, {job id: [stage names]} of the Spark jobs
+    fn launched), counted through a job group of its own."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        st = sc.statusTracker()
+        jobs = {}
+        for jid in st.getJobIdsForGroup(group):
+            info = st.getJobInfo(jid)
+            stages = [st.getStageInfo(s) for s in (info.stageIds if info else [])]
+            jobs[jid] = [s.name for s in stages if s is not None]
+        return out, jobs
+
+    return run
 
 
 @pytest.fixture(scope="module", autouse=True)

@@ -249,14 +249,14 @@ def test_ivf_assign_keeps_64bit_centroid_ids(spark):
 
 
 def test_connected_components_fractional_ids(spark):
-    """Fractional ids converge by the change-join probe, not the label
-    checksum: on the chain 2.1-2.4-2.45-2.49 the first round moves labels
-    2.4 -> 2.1 and 2.45 -> 2.4, changes the decimal(38,0) sum rounds away
-    (every label casts to 2), so a checksum stop would return 2.4 for
-    2.49 instead of 2.1."""
+    """Non-integral ids converge on the exact change count: on the chain
+    2.1-2.4-2.45-2.49 the first round moves labels 2.4 -> 2.1 and
+    2.45 -> 2.4, changes a decimal(38,0) label sum would round away (every
+    label casts to 2), so a checksum stop would return 2.4 for 2.49
+    instead of 2.1. String ids take the same detector."""
     from decimal import Decimal
 
-    for ddl, conv in (("double", float), ("decimal(4,2)", Decimal)):
+    for ddl, conv in (("double", float), ("decimal(4,2)", Decimal), ("string", str)):
         ids = [conv(v) for v in ("2.1", "2.4", "2.45", "2.49")]
         pairs = spark.createDataFrame(
             list(zip(ids, ids[1:])), f"id_a {ddl}, id_b {ddl}"
@@ -264,6 +264,22 @@ def test_connected_components_fractional_ids(spark):
         comp = {r["id"]: r["component"]
                 for r in dedupe.connected_components(pairs).collect()}
         assert comp == dict.fromkeys(ids, ids[0]), ddl
+
+
+def test_connected_components_huge_decimal_ids(spark):
+    """decimal(38,0) ids near 9e37 label without arithmetic: a sum of the
+    labels overflows decimal(38,0) and raises ARITHMETIC_OVERFLOW under
+    ANSI mode."""
+    from decimal import Decimal
+
+    base = 9 * 10**37
+    pairs = spark.createDataFrame(
+        [(Decimal(base + 2 * i), Decimal(base + 2 * i + 1)) for i in range(10)],
+        "id_a decimal(38,0), id_b decimal(38,0)",
+    )
+    comp = {int(r["id"]): int(r["component"])
+            for r in dedupe.connected_components(pairs).collect()}
+    assert comp == {base + k: base + k - k % 2 for k in range(20)}
 
 
 def test_connected_components_iteration_cap_raises(spark):

@@ -120,6 +120,15 @@ def test_flatten_replacements_chain(spark):
     assert flat == {(1, 4), (2, 4), (3, 4)}
 
 
+def test_flatten_replacements_leaves_no_cached_frame(spark):
+    """The rounds are local checkpoints, so nothing stays registered in
+    Spark's cache manager after the map is used."""
+    spark.catalog.clearCache()
+    repl = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "from_id long, to_id long")
+    merge.flatten_replacements(repl).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_rewrite_way_refs_adjacent_dedupe(spark):
     ways = spark.createDataFrame(
         [(1, [10, 11, 12, 13], {"highway": "x"})], fixtures.WAY_SCHEMA

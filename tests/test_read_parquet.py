@@ -4,7 +4,6 @@ infers a table's schema once and re-infers when any file changes."""
 from __future__ import annotations
 
 import os
-import uuid
 from collections import OrderedDict
 
 import pyarrow as pa
@@ -21,25 +20,12 @@ def _write(path: str, **cols) -> str:
     return path
 
 
-def _jobs(spark, fn):
-    """(fn's result, number of Spark jobs it launched)."""
-    sc = spark.sparkContext
-    group = f"read-parquet-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_second_read_launches_no_job(spark, tmp_path):
+def test_second_read_launches_no_job(spark, spark_jobs, tmp_path):
     path = _write(str(tmp_path / "t.parquet"), a=[1, 2, 3], b=["x", "y", "z"])
-    first, first_jobs = _jobs(spark, lambda: layout.read_parquet(spark, path))
-    second, second_jobs = _jobs(spark, lambda: layout.read_parquet(spark, path))
-    assert first_jobs >= 1  # schema inference is a job of its own
-    assert second_jobs == 0
+    first, first_jobs = spark_jobs(lambda: layout.read_parquet(spark, path))
+    second, second_jobs = spark_jobs(lambda: layout.read_parquet(spark, path))
+    assert len(first_jobs) >= 1  # schema inference is a job of its own
+    assert len(second_jobs) == 0
     assert second.schema == first.schema == spark.read.parquet(path).schema
     assert sorted(second.collect()) == sorted(first.collect())
 
@@ -54,7 +40,7 @@ def test_rewritten_table_shows_new_columns(spark, tmp_path):
     assert sorted(tuple(r) for r in df.collect()) == [(7, "p"), (8, "q"), (9, "r")]
 
 
-def test_schema_cache_stays_within_its_cap(spark, tmp_path, monkeypatch):
+def test_schema_cache_stays_within_its_cap(spark, spark_jobs, tmp_path, monkeypatch):
     monkeypatch.setattr(layout, "_SCHEMA_CACHE_CAP", 2)
     monkeypatch.setattr(layout, "_SCHEMA_CACHE", OrderedDict())
     paths = [_write(str(tmp_path / f"t{i}.parquet"), **{f"c{i}": [i]}) for i in range(4)]
@@ -62,10 +48,10 @@ def test_schema_cache_stays_within_its_cap(spark, tmp_path, monkeypatch):
         assert layout.read_parquet(spark, path).columns == [f"c{i}"]
         assert len(layout._SCHEMA_CACHE) <= 2
     # the least recently read table was evicted and is inferred again
-    _, jobs = _jobs(spark, lambda: layout.read_parquet(spark, paths[0]))
-    assert jobs >= 1
-    _, jobs = _jobs(spark, lambda: layout.read_parquet(spark, paths[3]))
-    assert jobs == 0
+    _, jobs = spark_jobs(lambda: layout.read_parquet(spark, paths[0]))
+    assert len(jobs) >= 1
+    _, jobs = spark_jobs(lambda: layout.read_parquet(spark, paths[3]))
+    assert len(jobs) == 0
     assert len(layout._SCHEMA_CACHE) == 2
 
 

@@ -189,31 +189,3 @@ def test_bidirectional_source_equals_target(spark):
     assert mu == 0.0 and meet == 0
     path = router.route_bidirectional(edges, 0, 0).collect()
     assert [(r["pos"], r["node"]) for r in path] == [(0, 0)]
-
-
-def test_bounded_probes_preserve_exactness(spark):
-    """probe_every=3 (driver probes every 3rd round, SCALE posture for
-    billion-node graphs): A* target distance and the bidirectional meeting
-    cost both still equal the unpruned SSSP values — deferred probes only
-    delay pruning/termination."""
-    e = _grid_edges(6, 5)
-    edges = spark.createDataFrame(e, "src long, dst long, w double")
-    expect = _reference_dijkstra(e, 0)[29]
-    _df, _db, mu, meet = router.bidirectional_distance(edges, 0, 29, probe_every=3)
-    assert mu is not None and abs(mu - expect) < 1e-9
-    assert meet is not None
-
-    nodes = spark.createDataFrame(
-        [(i, 0.001 * (i % 6), 0.001 * (i // 6), None) for i in range(30)],
-        fixtures.NODE_SCHEMA,
-    )
-    ways = spark.createDataFrame(
-        [(100 + y, [y * 6 + x for x in range(6)], None) for y in range(5)]
-        + [(200 + x, [y * 6 + x for y in range(5)], None) for x in range(6)],
-        fixtures.WAY_SCHEMA,
-    )
-    hedges = router.build_edges(ways, nodes)
-    full = {r["node"]: r["dist"] for r in router.shortest_path(hedges, 0).collect()}
-    out = router.astar_distance(hedges, nodes, 0, 29, probe_every=3)
-    got = out.filter(F.col("node") == 29).collect()[0]["dist"]
-    assert abs(got - full[29]) < 1e-9
