@@ -12,8 +12,9 @@ Three synchronized implementations, kept in lockstep:
 - `with_s2_key(df, ...)` — Spark Columns only (whole-stage codegen; the
   1024-entry Hilbert lookup table rides along as a broadcast 1-row array
   column so the plan carries ONE copy, not one per `element_at`).
-- `s2_cell_duckdb_sql(...)` — the DuckDB oracle twin (chained CTEs,
-  identical expression order so IEEE doubles agree bit-for-bit).
+- `s2_cell_duckdb_sql(...)` — the DuckDB oracle twin (one nested
+  projection per step, identical expression text so IEEE doubles agree
+  bit-for-bit).
 
 Key layout: the canonical S2 cell id packs `face(3) | pos(2*level) | 1`
 into a uint64, which overflows SIGNED int64 for faces 4-5 — unusable as a
@@ -372,13 +373,14 @@ def _s2_select_exprs(lon_sql: str, lat_sql: str, level: int, dialect: str,
                      out: str = "s2_key") -> list[str]:
     """Ordered `expr AS alias` select-list items computing the packed key.
 
-    Both engines resolve select-list aliases LATERALLY, so the whole
-    pipeline is one projection: one analysis pass on Spark (chained
-    withColumns re-analyze a growing plan per call — measured ~1.5s of
-    driver time per query build at 16 steps) and no CTE chain on DuckDB.
-    Only integer shift/index syntax differs per dialect; every floating-
-    point expression is emitted from the same template string, so IEEE
-    doubles agree bit-for-bit.
+    Each item may reference the aliases before it. Spark resolves them
+    LATERALLY, so its whole pipeline is one projection and one analysis
+    pass (chained withColumns re-analyze a growing plan per call —
+    measured ~1.5s of driver time per query build at 16 steps); DuckDB
+    nests one projection per item (`s2_cell_duckdb_sql`). Only integer
+    shift/index syntax differs per dialect; every floating-point
+    expression is emitted from the same template string, so IEEE doubles
+    agree bit-for-bit.
     """
     lookup_pos, _ = _tables()
     vals = ",".join(str(int(x)) for x in lookup_pos)
@@ -456,7 +458,14 @@ def s2_parent(key: Column, levels_up: int = 1) -> Column:
 
 def s2_cell_duckdb_sql(base_sql: str, select_cols: str, lon_sql: str,
                        lat_sql: str, level: int, out: str = "s2_key") -> str:
-    """DuckDB oracle twin — same generator, duckdb shift/index syntax."""
-    exprs = _s2_select_exprs(lon_sql, lat_sql, level, "duckdb", out)
-    inner = f"SELECT {select_cols}, {', '.join(exprs)} FROM {base_sql}"
-    return f"SELECT {select_cols}, {out} FROM ({inner}) __s2_t"
+    """DuckDB oracle twin — same generator, duckdb shift/index syntax.
+
+    Each select item gets a projection of its own (`SELECT *, <item>
+    FROM (<previous>)`): DuckDB 1.0 expands every lateral-alias reference
+    into a copy of the aliased expression, so the one-projection form
+    grows the `__s2b*` chain into thousands of trig subexpressions and
+    takes about 100 s to plan on sf0.001; nested, it plans at once."""
+    sql = f"SELECT * FROM {base_sql}"
+    for n, item in enumerate(_s2_select_exprs(lon_sql, lat_sql, level, "duckdb", out)):
+        sql = f"SELECT *, {item} FROM ({sql}) __s2_{n}"
+    return f"SELECT {select_cols}, {out} FROM ({sql}) __s2_t"

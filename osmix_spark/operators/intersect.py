@@ -10,10 +10,10 @@ waysShouldConnect (change/src/utils.ts:116-131) and nearest-node splice
   2. coordinates resolved via the J1 way->node join (collect per way);
   3. exact segment intersections + per-point classification (shared node /
      reuse nearest node within 1 m / create new node) vectorized in NumPy
-     inside applyInPandas, one group per candidate pair;
-  4. deterministic id allocation for created nodes: max(node id) +
-     dense_rank over (lon, lat) of new points — parallel-safe, matching the
-     reference's sequential max+1 counter in effect;
+     inside mapInPandas over Arrow batches of candidate pairs;
+  4. deterministic id allocation for created nodes: max(node id) + rank
+     in (cell, lon, lat) order via per-cell offsets — parallel-safe,
+     matching the reference's sequential max+1 counter in effect;
   5. per-way splice aggregation: all new refs for a way are inserted before
      their nearest existing ref (the reference's nearestNodeOnWay insert),
      applied in one pass per way.
@@ -35,6 +35,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..functions import geo
+from ..plans import fixpoint
 from . import merge, spatial
 
 _FOOTISH = ("footway", "path", "cycleway", "bridleway", "steps")
@@ -54,6 +55,13 @@ def _is_polygonish(tags) -> F.Column:
         | F.element_at(tags, F.lit("landuse")).isNotNull()
         | F.element_at(tags, F.lit("natural")).isNotNull()
     )
+
+
+def _is_shared() -> F.Column:
+    """The point is a node both ways already have. Never null: `<=>` makes
+    it false when only way a has a node there (near_b null), so `~` keeps
+    that point with the real crossings."""
+    return F.col("near_a").isNotNull() & F.col("near_a").eqNullSafe(F.col("near_b"))
 
 
 def is_intersection_candidate(tags) -> F.Column:
@@ -258,14 +266,18 @@ def create_intersections(ways: DataFrame, nodes: DataFrame, z: int = 13,
     sequential max+1 counter in effect.
     updated_ways: the input ways with new refs spliced in.
     tagged_node_ids: existing node ids that gain crossing=yes.
+    stats: intersection_points_found, intersection_nodes_created and
+    shared_node_points, each observed on a `fixpoint.checkpoint` of the
+    frame it counts (the intersection points, the distinct created
+    points), so no job runs for a counter. The returned frames stay lazy
+    and read the points from their checkpoint.
     """
-    spark = ways.sparkSession
-    pts = find_intersection_points(ways, nodes, z=z, candidates=candidates).cache()
-
-    shared = pts.filter(
-        F.col("near_a").isNotNull() & (F.col("near_a") == F.col("near_b"))
+    pts, seen = fixpoint.checkpoint(
+        find_intersection_points(ways, nodes, z=z, candidates=candidates),
+        points=F.count(F.lit(1)), shared=F.count_if(_is_shared()),
     )
-    real = pts.exceptAll(shared)
+    shared = pts.filter(_is_shared())
+    real = pts.filter(~_is_shared())
 
     # classification (changeset.ts:629-688): prefer way-a node, then way-b
     # node, else create
@@ -279,8 +291,13 @@ def create_intersections(ways: DataFrame, nodes: DataFrame, z: int = 13,
     # deterministic distributed id allocation: rank within cell partitions +
     # per-cell offsets (the tiny offsets window runs over #cells rows, not
     # #creates — no single-task global window at scale)
-    distinct_pts = creates.select("px", "py").distinct().withColumn(
-        "__cell", geo.cell_key(F.col("px"), F.col("py"), F.lit(z))
+    # the count of created nodes is observed here, not on pts: observed
+    # metrics reject DISTINCT aggregates
+    distinct_pts, created = fixpoint.checkpoint(
+        creates.select("px", "py").distinct().withColumn(
+            "__cell", geo.cell_key(F.col("px"), F.col("py"), F.lit(z))
+        ),
+        n=F.count(F.lit(1)),
     )
     offs = (
         distinct_pts.groupBy("__cell").agg(F.count(F.lit(1)).alias("__n"))
@@ -357,8 +374,8 @@ def create_intersections(ways: DataFrame, nodes: DataFrame, z: int = 13,
     updated_ways = w2.withColumn("refs", apply_ins).drop("ins")
 
     stats = {
-        "intersection_points_found": real.count(),
-        "intersection_nodes_created": new_nodes.count(),
-        "shared_node_points": shared.count(),
+        "intersection_points_found": seen["points"] - seen["shared"],
+        "intersection_nodes_created": created["n"],
+        "shared_node_points": seen["shared"],
     }
     return new_nodes, updated_ways, tagged, stats

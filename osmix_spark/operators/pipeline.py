@@ -22,7 +22,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans import lineage
+from ..plans import fixpoint, lineage
 from . import intersect, merge
 
 
@@ -78,9 +78,21 @@ def merge_datasets(base_nodes: DataFrame, base_ways: DataFrame,
     intersections it is semantic: two base ways that crossed before the
     merge must NOT get a new crossing node. It also keeps stages 6-7
     O(patch) instead of O(base) at planet scale. False restores the
-    whole-dataset sweep (a repair mode the reference does not have)."""
+    whole-dataset sweep (a repair mode the reference does not have).
+
+    stats counts rows (merged_*, deduplicated_*, final_*, plus the
+    intersection counters of create_intersections), each observed on a
+    `fixpoint.checkpoint` of the frame it counts: the stage-5 outputs,
+    the stage-6 replacement maps and the returned nodes and ways. No job
+    runs for a counter, and the returned nodes and ways are materialised,
+    so the caller's action does not run the pipeline again."""
     spark = base_nodes.sparkSession
     stats: dict = {}
+
+    def counted(df: DataFrame, name: str) -> DataFrame:
+        df, seen = fixpoint.checkpoint(df, n=F.count(F.lit(1)))
+        stats[name] = seen["n"]
+        return df
 
     def ckpt(df: DataFrame, name: str, key: str) -> DataFrame:
         if checkpoint_dir is None:
@@ -108,9 +120,9 @@ def merge_datasets(base_nodes: DataFrame, base_ways: DataFrame,
             relations = merge.direct_merge(b_rels, p_rels)
         else:
             relations = b_rels if b_rels is not None else p_rels
-        stats["merged_relations"] = relations.count()
-    stats["merged_nodes"] = nodes.count()
-    stats["merged_ways"] = ways.count()
+        relations = counted(relations, "merged_relations")
+    nodes = counted(nodes, "merged_nodes")
+    ways = counted(ways, "merged_ways")
 
     # stage 6: final dedupe across the merged result — ways first, then
     # nodes, each behind the reference's option flag (merge.ts:86-103,
@@ -120,16 +132,16 @@ def merge_datasets(base_nodes: DataFrame, base_ways: DataFrame,
     patch_way_ids = p_ways.select("id") if patch_scope_final else None
     patch_node_ids = p_nodes.select("id") if patch_scope_final else None
     if dedupe_final_ways:
-        way_repl = merge.dedupe_ways(ways, nodes, candidates=patch_way_ids)
-        stats["deduplicated_ways"] = way_repl.count()
+        way_repl = counted(merge.dedupe_ways(ways, nodes, candidates=patch_way_ids),
+                           "deduplicated_ways")
         ways = ways.join(
             way_repl.select(F.col("from_id").alias("id")), "id", "left_anti"
         )
         if relations is not None:
             relations = merge.rewrite_relation_members(relations, way_repl=way_repl)
     if dedupe_final_nodes:
-        node_repl = merge.dedupe_nodes(nodes, candidates=patch_node_ids)
-        stats["deduplicated_nodes"] = node_repl.count()
+        node_repl = counted(merge.dedupe_nodes(nodes, candidates=patch_node_ids),
+                            "deduplicated_nodes")
         ways = merge.rewrite_way_refs(ways, node_repl)
         if relations is not None:
             relations = merge.rewrite_relation_members(relations, node_repl)
@@ -167,8 +179,8 @@ def merge_datasets(base_nodes: DataFrame, base_ways: DataFrame,
             )
             .drop("__tid")
         )
-    stats["final_nodes"] = nodes.count()
-    stats["final_ways"] = ways.count()
+    nodes = counted(nodes, "final_nodes")
+    ways = counted(ways, "final_ways")
     if with_relations:
         return nodes, ways, relations, stats
     return nodes, ways, stats

@@ -14,8 +14,7 @@ Scale notes:
 - The cell join is the only shuffle; its key is the partition key big layers
   are already clustered on, so at 100 TB the coarse phase is a co-located
   sort-merge join (or broadcast for small dims) rather than a cross join.
-- Hot cells (dense cities) are handled by AQE skew-join splitting plus the
-  optional salt in neighbor_cells-based joins.
+- Hot cells (dense cities) are handled by AQE skew-join splitting.
 - All fine-phase math is Catalyst expressions except PIP, which is an
   Arrow-batched mapInPandas (NumPy ray casting) — no per-row Python.
 

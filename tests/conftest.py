@@ -49,16 +49,30 @@ def spark_jobs(spark):
     return run
 
 
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.fixture
+def cache_is_empty(spark):
+    """() -> whether Spark's cache manager holds no frame."""
+    return lambda: _cache_is_empty(spark)
+
+
 @pytest.fixture(scope="module", autouse=True)
-def _clear_cache_between_modules():
-    """Drop explicit .cache() leftovers after each test module so the
-    shared session's heap stays flat across the suite."""
+def _no_cached_frame_left(request):
+    """The engine caches nothing, so Spark's cache manager must be empty
+    after each test module. The cache is cleared either way, so one leak
+    fails one module and not every module after it."""
     yield
     from pyspark.sql import SparkSession
 
     active = SparkSession.getActiveSession()
-    if active is not None:
-        active.catalog.clearCache()
+    if active is None:
+        return
+    leaked = not _cache_is_empty(active)
+    active.catalog.clearCache()
+    assert not leaked, f"{request.module.__name__} left a frame in Spark's cache manager"
 
 
 @pytest.fixture(scope="session")

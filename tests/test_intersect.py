@@ -90,6 +90,49 @@ def test_shared_node_crossing_is_not_counted(spark):
     assert w[10] == [1, 2, 3] and w[11] == [4, 2, 5]
 
 
+def test_crossing_at_a_node_of_way_a_only_is_counted_and_spliced(spark):
+    # way 11 crosses way 10 at way 10's node 2 and has no node there
+    # (near_a = 2, near_b null): a real crossing that reuses node 2, not a
+    # shared one — the null near_b must not drop it from the counted points
+    nodes = spark.createDataFrame(
+        [
+            (1, 0.0, 0.0, None), (2, 0.001, 0.0, None), (3, 0.002, 0.0, None),
+            (4, 0.001, -0.003, None), (5, 0.001, 0.001, None),
+        ],
+        fixtures.NODE_SCHEMA,
+    )
+    ways = spark.createDataFrame(
+        [
+            (10, [1, 2, 3], {"highway": "primary"}),
+            (11, [4, 5], {"highway": "secondary"}),
+        ],
+        fixtures.WAY_SCHEMA,
+    )
+    new_nodes, updated_ways, tagged, stats = intersect.create_intersections(ways, nodes)
+    assert stats == {"intersection_points_found": 1, "intersection_nodes_created": 0,
+                     "shared_node_points": 0}
+    assert new_nodes.collect() == []
+    assert {r["id"] for r in tagged.collect()} == {2}
+    w = {r["id"]: r["refs"] for r in updated_ways.collect()}
+    # spliced before way 11's nearest ref, node 5
+    assert w[10] == [1, 2, 3] and w[11] == [4, 2, 5]
+
+
+def test_counters_launch_no_count_job_and_leave_no_cache(spark, spark_jobs,
+                                                          cache_is_empty, merged):
+    nodes, ways = merged
+    spark.catalog.clearCache()
+    (_, _, _, stats), jobs = spark_jobs(lambda: intersect.create_intersections(ways, nodes))
+    assert stats == {"intersection_points_found": 1, "intersection_nodes_created": 1,
+                     "shared_node_points": 0}
+    assert not [n for names in jobs.values() for n in names if n.startswith("count at ")], jobs
+    # one collect: next_entity_id's max, whose value is part of the plan
+    # (AQE runs it as one job per query stage, all named after its site)
+    sites = {n for names in jobs.values() for n in names if n.startswith("collect at ")}
+    assert len(sites) <= 1 and all("merge.py" in s for s in sites), sites
+    assert cache_is_empty()
+
+
 # ---------------------------------------------------------------------------
 # Patch-scoped stage-7 candidates (merge.ts:102-107): the final-merge
 # intersection pass only considers pairs touching a PATCH way — a

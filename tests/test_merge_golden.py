@@ -120,13 +120,13 @@ def test_flatten_replacements_chain(spark):
     assert flat == {(1, 4), (2, 4), (3, 4)}
 
 
-def test_flatten_replacements_leaves_no_cached_frame(spark):
+def test_flatten_replacements_leaves_no_cached_frame(spark, cache_is_empty):
     """The rounds are local checkpoints, so nothing stays registered in
     Spark's cache manager after the map is used."""
     spark.catalog.clearCache()
     repl = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "from_id long, to_id long")
     merge.flatten_replacements(repl).collect()
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert cache_is_empty()
 
 
 def test_rewrite_way_refs_adjacent_dedupe(spark):

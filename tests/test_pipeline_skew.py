@@ -1,12 +1,9 @@
-"""Full merge pipeline (merge.ts 7-stage golden end state) + skew handling."""
+"""Full merge pipeline (merge.ts 7-stage golden end state)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from osmix_spark.functions import geo
-from osmix_spark.operators import pipeline, skew
-from osmix_spark.sources import fixtures, synth
+from osmix_spark.operators import pipeline
+from osmix_spark.sources import fixtures
 
 
 def test_full_merge_pipeline_golden(spark, tmp_path):
@@ -49,64 +46,16 @@ def test_pipeline_resumes_from_checkpoints(spark, tmp_path):
     assert r1 == r2
 
 
-def _skewed_points(spark, n=20_000):
-    # ~70% of rows land in one cell (cluster 1), the rest spread
-    i = F.col("id")
-    hot = synth.cluster_center(1)
-    return spark.range(n).select(
-        F.col("id"),
-        F.when(i % 10 < 7, F.lit(hot[0]) + (i % 97).cast("double") * 1e-4)
-        .otherwise(synth.scattered_lon("id")).alias("lon"),
-        F.when(i % 10 < 7, F.lit(hot[1]) + (i % 89).cast("double") * 1e-4)
-        .otherwise(synth.scattered_lat("id")).alias("lat"),
-    )
-
-
-def test_adaptive_cell_splitting_reduces_max_cell(spark):
-    pts = _skewed_points(spark)
-    base = pts.withColumn("cell", geo.cell_key(F.col("lon"), F.col("lat"), F.lit(8)))
-    before = skew.cell_histogram(base).agg(F.max("n")).collect()[0][0]
-
-    adaptive = skew.with_adaptive_cell(pts, base_z=8, fine_z=20, threshold=2000)
-    after = skew.cell_histogram(adaptive).agg(F.max("n")).collect()[0][0]
-    assert before > 10_000
-    assert after < before / 4
-    # total rows preserved and every row still keyed
-    assert adaptive.count() == pts.count()
-    # mixed resolutions present: both z8 and z16 keys
-    zs = {r[0] for r in adaptive.select(geo.cell_key_parts(F.col("cell"))[0]).distinct().collect()}
-    assert zs == {8, 20}
-
-
-def test_escalation_join_consistency(spark):
-    """Both join sides re-keyed with the SAME hot-cell set produce the same
-    pairs as a plain fine-z join restricted to same-cell pairs."""
-    pts = _skewed_points(spark, 5000)
-    base = pts.withColumn("cell", geo.cell_key(F.col("lon"), F.col("lat"), F.lit(8)))
-    hot = skew.detect_hot_cells(base, threshold=1000).select("cell")
-    a = skew.apply_cell_escalation(pts, hot, base_z=8, fine_z=12)
-    b = skew.apply_cell_escalation(
-        pts.withColumn("id", F.col("id") + 1_000_000), hot, base_z=8, fine_z=12
-    )
-    joined = a.select(F.col("id").alias("ia"), "cell").join(
-        b.select(F.col("id").alias("ib"), "cell"), "cell"
-    )
-    # sanity: join completes and respects the mixed keying
-    assert joined.count() > 0
-
-
-def test_salted_agg_matches_plain(spark):
-    pts = _skewed_points(spark, 10_000).withColumn(
-        "cell", geo.cell_key(F.col("lon"), F.col("lat"), F.lit(8))
-    ).withColumn("v", (F.col("id") % 7).cast("double"))
-    plain = {
-        (r["cell"]): (r["c"], r["s"])
-        for r in pts.groupBy("cell").agg(
-            F.count(F.lit(1)).alias("c"), F.sum("v").alias("s")
-        ).collect()
-    }
-    salted = {
-        (r["cell"]): (r["count"], r["v_sum"])
-        for r in skew.salted_agg(pts, "cell", [("*", "count"), ("v", "sum")]).collect()
-    }
-    assert plain == salted
+def test_counters_launch_no_count_job_and_leave_no_cache(spark, spark_jobs, cache_is_empty):
+    spark.catalog.clearCache()
+    (nodes, ways, stats), jobs = spark_jobs(lambda: pipeline.merge_datasets(
+        fixtures.base_nodes(spark), fixtures.base_ways(spark),
+        fixtures.patch_nodes(spark), fixtures.patch_ways(spark),
+    ))
+    assert (stats["merged_nodes"], stats["merged_ways"], stats["deduplicated_nodes"],
+            stats["final_nodes"], stats["final_ways"]) == (8, 4, 1, 8, 4)
+    assert not [n for names in jobs.values() for n in names if n.startswith("count at ")], jobs
+    assert cache_is_empty()
+    # the returned frames are checkpoints: reading them shuffles nothing
+    for df in (nodes, ways):
+        assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()

@@ -1,7 +1,8 @@
 """Local stand-in for the driver's correctness gate: run every queries()
 entry on Spark AND its oracle_sql() twin on DuckDB over the same parquet
 tables; compare row count, sorted-column schema, and an order-insensitive
-value hash (floats canonicalized via repr of rounded values).
+value hash (floats canonicalized via repr of rounded values). A query that
+leaves a frame in Spark's cache manager fails whatever its hash.
 
 Usage: python tools/check_parity.py [sf_dir] [query ...]
 """
@@ -70,6 +71,11 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {str(e)[:300]}")
             failures.append(name)
+            continue
+        if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+            print(f"FAIL  {name}: left a frame in Spark's cache manager")
+            failures.append(name)
+            spark.catalog.clearCache()
             continue
         if name not in oracles:
             print(f"ok?   {name}: rows={len(sdf)} (no oracle, rows-only) [{time.time()-t0:.1f}s]")
