@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import geo
+from ..plans.stage import per_key
 
 
 def _fmt_sql(sql: str, precision: int) -> str:
@@ -298,8 +299,6 @@ def _relation_geometry_json(area_members: DataFrame, line_members: DataFrame,
 
     point_vertices: optional (relation_id, lon, lat, seq) frame of
     resolved node members of point-kind relations."""
-    from .tiles import _spread
-
     am = area_members.selectExpr(
         "relation_id", "member_ref as way_id",
         "coalesce(role, 'outer') as role", "0 as seq", "'area' as kind",
@@ -328,9 +327,7 @@ def _relation_geometry_json(area_members: DataFrame, line_members: DataFrame,
             geom = _build_line_geom(pdf, precision)
         return pd.DataFrame([{"relation_id": rid, "geometry": geom}])
 
-    return _spread(m, "relation_id").groupBy("relation_id").applyInPandas(
-        build, schema=_REL_GEOM_SCHEMA
-    )
+    return per_key(m, ["relation_id"], build, _REL_GEOM_SCHEMA)
 
 
 def relations_to_features(relations: DataFrame, members: DataFrame,

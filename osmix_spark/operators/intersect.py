@@ -25,10 +25,6 @@ pairs (a tiny fraction of ways), Arrow-batched.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -36,6 +32,7 @@ from pyspark.sql.window import Window
 
 from ..functions import geo
 from ..plans import fixpoint
+from ..plans.stage import per_row
 from . import merge, spatial
 
 _FOOTISH = ("footway", "path", "cycleway", "bridleway", "steps")
@@ -217,39 +214,33 @@ def find_intersection_points(ways: DataFrame, nodes: DataFrame, z: int = 13,
         .select(*a.columns, *[f"b_{c}" for c in boxes.columns])
     )
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def compute(r):
         import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                ax_, ay_, arefs = _clean(
-                    np.asarray(r.a_lons), np.asarray(r.a_lats), list(r.a_ordered_refs)
-                )
-                bx_, by_, brefs = _clean(
-                    np.asarray(r.b_lons), np.asarray(r.b_lats), list(r.b_ordered_refs)
-                )
-                if len(ax_) < 2 or len(bx_) < 2:
-                    continue
-                if len(ax_) == len(bx_) and (ax_ == bx_).all() and (ay_ == by_).all():
-                    continue  # geometrically equal ways are dedupe's job
-                for px, py in _seg_intersections(ax_, ay_, bx_, by_):
-                    da = _haversine_np(ax_, ay_, px, py)
-                    db = _haversine_np(bx_, by_, px, py)
-                    ia, ib = int(da.argmin()), int(db.argmin())
-                    rows.append(
-                        {
-                            "way_a": int(r.a_id), "way_b": int(r.b_id),
-                            "px": float(px), "py": float(py),
-                            "near_a": int(arefs[ia]) if da[ia] < 1.0 else None,
-                            "near_b": int(brefs[ib]) if db[ib] < 1.0 else None,
-                            "splice_a_at": ia,
-                            "splice_b_at": ib,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in _POINT_SCHEMA.fields])
+        ax_, ay_, arefs = _clean(
+            np.asarray(r.a_lons), np.asarray(r.a_lats), list(r.a_ordered_refs)
+        )
+        bx_, by_, brefs = _clean(
+            np.asarray(r.b_lons), np.asarray(r.b_lats), list(r.b_ordered_refs)
+        )
+        if len(ax_) < 2 or len(bx_) < 2:
+            return
+        if len(ax_) == len(bx_) and (ax_ == bx_).all() and (ay_ == by_).all():
+            return  # geometrically equal ways are dedupe's job
+        for px, py in _seg_intersections(ax_, ay_, bx_, by_):
+            da = _haversine_np(ax_, ay_, px, py)
+            db = _haversine_np(bx_, by_, px, py)
+            ia, ib = int(da.argmin()), int(db.argmin())
+            yield {
+                "way_a": int(r.a_id), "way_b": int(r.b_id),
+                "px": float(px), "py": float(py),
+                "near_a": int(arefs[ia]) if da[ia] < 1.0 else None,
+                "near_b": int(brefs[ib]) if db[ib] < 1.0 else None,
+                "splice_a_at": ia,
+                "splice_b_at": ib,
+            }
 
-    return pairs.mapInPandas(compute, schema=_POINT_SCHEMA)
+    return per_row(pairs, compute, _POINT_SCHEMA)
 
 
 def create_intersections(ways: DataFrame, nodes: DataFrame, z: int = 13,

@@ -3,8 +3,8 @@
 The image path is REAL for both major web formats, no image libraries
 needed:
 
-- PNG: pure stdlib-zlib + NumPy decoder (all five scanline filters:
-  None/Sub/Up/Average/Paeth per the PNG spec);
+- PNG: pure stdlib-zlib + NumPy codec (functions/png — all five scanline
+  filters: None/Sub/Up/Average/Paeth per the PNG spec);
 - JPEG: pure-NumPy baseline codec (functions/jpeg — ITU T.81 SOF0, Huffman
   + DCT, 4:4:4/4:2:0, restart markers), decoder AND encoder (fixtures).
 
@@ -24,13 +24,16 @@ that must be right regardless of codec.
 
 from __future__ import annotations
 
-from typing import Iterator
+import hashlib
 
-import pandas as pd
+import numpy as np
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions import gif, jpeg, png
+from ..plans.stage import per_row
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -80,83 +83,6 @@ def synth_media(spark, n: int, parts: int = 4) -> DataFrame:
     )
 
 
-_PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-
-
-def decode_png(data: bytes):
-    """Pure-Python PNG decoder (stdlib zlib + NumPy): 8-bit RGBA/RGB/gray,
-    ALL five scanline filters (PNG spec §9: None, Sub, Up, Average, Paeth).
-    Returns an (h, w, channels) uint8 array."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    if data[:8] != _PNG_MAGIC:
-        raise ValueError("not a PNG")
-    i = 8
-    w = h = 0
-    channels = 4
-    idat = bytearray()
-    while i < len(data):
-        (ln,) = struct.unpack(">I", data[i : i + 4])
-        typ = data[i + 4 : i + 8]
-        payload = data[i + 8 : i + 8 + ln]
-        if typ == b"IHDR":
-            w, h, bit_depth, color_type, comp, filt, interlace = struct.unpack(
-                ">IIBBBBB", payload[:13]
-            )
-            if bit_depth != 8:
-                raise NotImplementedError("8-bit PNG only")
-            if interlace != 0:
-                raise NotImplementedError("interlaced (Adam7) PNG not supported")
-            if comp != 0 or filt != 0:
-                raise ValueError("invalid PNG compression/filter method")
-            channels = {0: 1, 2: 3, 6: 4}.get(color_type)
-            if channels is None:
-                raise NotImplementedError(f"PNG color type {color_type}")
-        elif typ == b"IDAT":
-            idat += payload
-        i += 12 + ln
-    raw = zlib.decompress(bytes(idat))
-    stride = w * channels
-    bpp = channels
-    out = np.zeros((h, stride), dtype=np.uint8)
-    pos = 0
-    prev = np.zeros(stride, dtype=np.uint8)
-    for y in range(h):
-        ftype = raw[pos]
-        line = np.frombuffer(raw, dtype=np.uint8, count=stride, offset=pos + 1).copy()
-        pos += 1 + stride
-        if ftype == 0:
-            pass
-        elif ftype == 2:  # Up
-            line = (line.astype(np.int32) + prev).astype(np.uint8)
-        elif ftype in (1, 3, 4):  # Sub / Average / Paeth need a left scan
-            cur = line.astype(np.int32)
-            res = np.zeros(stride, dtype=np.int32)
-            pv = prev.astype(np.int32)
-            for x in range(stride):
-                a = res[x - bpp] if x >= bpp else 0
-                b = pv[x]
-                if ftype == 1:
-                    res[x] = (cur[x] + a) & 0xFF
-                elif ftype == 3:
-                    res[x] = (cur[x] + (a + b) // 2) & 0xFF
-                else:
-                    c = pv[x - bpp] if x >= bpp else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                    res[x] = (cur[x] + pred) & 0xFF
-            line = res.astype(np.uint8)
-        else:
-            raise ValueError(f"bad PNG filter {ftype}")
-        out[y] = line
-        prev = out[y]
-    return out.reshape(h, w, channels)
-
-
 _JPEG_MAGIC = b"\xff\xd8"
 _RIFF_MAGIC = b"RIFF"
 _GIF_MAGICS = (b"GIF87a", b"GIF89a")
@@ -167,8 +93,6 @@ def decode_wav(data: bytes):
     PCM only (the uncompressed web/archival staple). Returns
     (samples int16 ndarray of shape (n, channels), sample_rate)."""
     import struct
-
-    import numpy as np
 
     if data[:4] != _RIFF_MAGIC or data[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE file")
@@ -199,8 +123,6 @@ def encode_wav(samples, rate: int) -> bytes:
     """Pure-stdlib 16-bit PCM WAV writer (fixture generator twin)."""
     import struct
 
-    import numpy as np
-
     s = np.asarray(samples, dtype="<i2")
     if s.ndim == 1:
         s = s[:, None]
@@ -218,7 +140,7 @@ def decode_media(media: DataFrame, fake: bool = False, feature_dim: int = 8,
                  with_status: bool = False) -> DataFrame:
     """Decode + feature-extract in Arrow batches.
 
-    PNG payloads decode FOR REAL (decode_png) and so do baseline AND
+    PNG payloads decode FOR REAL (functions/png) and so do baseline AND
     progressive JPEGs (functions/jpeg.decode) and GIF87a/89a
     (functions/gif — LZW, interlace, local tables; animations contribute
     their first composited frame): width/height from the header, features
@@ -238,138 +160,84 @@ def decode_media(media: DataFrame, fake: bool = False, feature_dim: int = 8,
     (FEATURE_STATUS_SCHEMA). Corrupt payloads (ValueError) still raise —
     that is a data error, not a codec boundary."""
 
-    def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        import numpy as np
-
-        from ..functions import jpeg as _jpeg
-
-        out_fields = [
-            f.name
-            for f in (FEATURE_STATUS_SCHEMA if with_status else FEATURE_SCHEMA).fields
-        ]
-        for pdf in batches:
-            rows = []
-
-            def unsupported(r, h, buf):
-                rows.append(
-                    {
-                        "media_id": int(r.media_id), "content_hash": h,
-                        "n_bytes": len(buf), "width": None, "height": None,
-                        "features": None, "status": "unsupported_codec",
-                    }
-                )
-
-            for r in pdf.itertuples(index=False):
-                buf = bytes(r.payload)
-                h = int.from_bytes(hashlib.md5(buf).digest()[:8], "big") >> 1
-                # real-decoder routing: a NotImplementedError from a decoder
-                # (non-PCM WAV, arithmetic-coded JPEG, ...) is a codec gap — it
-                # becomes a status row under with_status, falls through to
-                # the stand-in under fake=True, and raises otherwise;
-                # corrupt data (ValueError) always surfaces
-                if buf[:4] == _RIFF_MAGIC and buf[8:12] == b"WAVE":
-                    try:
-                        samples, rate = decode_wav(buf)
-                    except NotImplementedError:
-                        if with_status:
-                            unsupported(r, h, buf)
-                            continue
-                        if not fake:
-                            raise
-                        samples = None
-                    if samples is not None:
-                        flat = samples.astype(np.float64)
-                        feats = np.array(
-                            [samples.shape[1], rate, flat.mean(),
-                             np.sqrt((flat * flat).mean())],
-                            dtype=np.float32,
-                        )
-                        rows.append(
-                            {
-                                "media_id": int(r.media_id),
-                                "content_hash": h,
-                                "n_bytes": len(buf),
-                                "width": None,   # audio has no raster dims;
-                                "height": None,  # n_samples rides in features
-                                "features": feats.tolist(),
-                                "status": "ok",
-                            }
-                        )
-                        continue
-                img = None
-                try:
-                    if buf[:8] == _PNG_MAGIC:
-                        img = decode_png(buf)
-                    elif buf[:2] == _JPEG_MAGIC:
-                        img = _jpeg.decode_baseline(buf)
-                    elif buf[:6] in _GIF_MAGICS:
-                        from ..functions.gif import decode_gif
-
-                        img = decode_gif(buf)  # first frame, RGBA
-                except NotImplementedError:
-                    if with_status:
-                        unsupported(r, h, buf)
-                        continue
-                    if not fake:
-                        raise
-                    img = None
-                if img is not None:
-                    feats = img.reshape(-1, img.shape[2]).mean(axis=0)
-                    if img.shape[2] == 3:  # implicit opaque alpha for JPEG/RGB
-                        feats = np.concatenate([feats, [255.0]])
-                    rows.append(
-                        {
-                            "media_id": int(r.media_id),
-                            "content_hash": h,
-                            "n_bytes": len(buf),
-                            "width": int(img.shape[1]),
-                            "height": int(img.shape[0]),
-                            "features": feats.astype(np.float32).tolist(),
-                            "status": "ok",
-                        }
-                    )
-                    continue
+    def go(r):
+        buf = bytes(r.payload)
+        base = {
+            "media_id": int(r.media_id),
+            "content_hash": int.from_bytes(hashlib.md5(buf).digest()[:8], "big") >> 1,
+            "n_bytes": len(buf), "width": None, "height": None, "status": "ok",
+        }
+        unsupported = {**base, "features": None, "status": "unsupported_codec"}
+        # real-decoder routing: a NotImplementedError from a decoder
+        # (non-PCM WAV, arithmetic-coded JPEG, ...) is a codec gap — it
+        # becomes a status row under with_status, falls through to the
+        # stand-in under fake=True, and raises otherwise; corrupt data
+        # (ValueError) always surfaces
+        if buf[:4] == _RIFF_MAGIC and buf[8:12] == b"WAVE":
+            try:
+                samples, rate = decode_wav(buf)
+            except NotImplementedError:
                 if with_status:
-                    unsupported(r, h, buf)
-                    continue
+                    yield unsupported
+                    return
                 if not fake:
-                    raise NotImplementedError(
-                        "compressed-audio/video codecs not available in "
-                        "this environment (PNG, baseline JPEG, and WAV/PCM "
-                        "decode for real); pass fake=True for the "
-                        "deterministic stand-in"
-                    )
-                arr = np.frombuffer(buf, dtype=np.uint8).astype(np.float32)
-                pad = (-len(arr)) % feature_dim
-                if pad:
-                    arr = np.concatenate([arr, np.zeros(pad, dtype=np.float32)])
-                feats = arr.reshape(-1, feature_dim).mean(axis=0) / 255.0
-                rows.append(
-                    {
-                        "media_id": int(r.media_id),
-                        "content_hash": h,
-                        "n_bytes": len(buf),
-                        "width": len(buf) % 640 if r.kind == "image" else None,
-                        "height": len(buf) % 480 if r.kind == "image" else None,
-                        "features": feats.tolist(),
-                        "status": "ok",
-                    }
+                    raise
+            else:
+                flat = samples.astype(np.float64)
+                feats = np.array(
+                    [samples.shape[1], rate, flat.mean(), np.sqrt((flat * flat).mean())],
+                    dtype=np.float32,
                 )
-            yield pd.DataFrame(rows, columns=out_fields)
+                # audio has no raster dims; n_samples rides in features
+                yield {**base, "features": feats.tolist()}
+                return
+        img = None
+        try:
+            if buf[:8] == png.MAGIC:
+                img = png.decode_png(buf)
+            elif buf[:2] == _JPEG_MAGIC:
+                img = jpeg.decode_baseline(buf)
+            elif buf[:6] in _GIF_MAGICS:
+                img = gif.decode_gif(buf)  # first frame, RGBA
+        except NotImplementedError:
+            if with_status:
+                yield unsupported
+                return
+            if not fake:
+                raise
+        if img is not None:
+            feats = img.reshape(-1, img.shape[2]).mean(axis=0)
+            if img.shape[2] == 3:  # implicit opaque alpha for JPEG/RGB
+                feats = np.concatenate([feats, [255.0]])
+            yield {**base, "width": int(img.shape[1]), "height": int(img.shape[0]),
+                   "features": feats.astype(np.float32).tolist()}
+            return
+        if with_status:
+            yield unsupported
+            return
+        if not fake:
+            raise NotImplementedError(
+                "compressed-audio/video codecs not available in "
+                "this environment (PNG, baseline JPEG, and WAV/PCM "
+                "decode for real); pass fake=True for the "
+                "deterministic stand-in"
+            )
+        arr = np.frombuffer(buf, dtype=np.uint8).astype(np.float32)
+        pad = (-len(arr)) % feature_dim
+        if pad:
+            arr = np.concatenate([arr, np.zeros(pad, dtype=np.float32)])
+        feats = arr.reshape(-1, feature_dim).mean(axis=0) / 255.0
+        yield {**base,
+               "width": len(buf) % 640 if r.kind == "image" else None,
+               "height": len(buf) % 480 if r.kind == "image" else None,
+               "features": feats.tolist()}
 
-    return media.mapInPandas(
-        go, schema=FEATURE_STATUS_SCHEMA if with_status else FEATURE_SCHEMA
-    )
-
+    return per_row(media, go, FEATURE_STATUS_SCHEMA if with_status else FEATURE_SCHEMA)
 
 
 def _png_pixels(mid: int, size: int):
     """The PNG fixture image: r=(x+id)%256, g=(y+id)%256, b=(x+2y+id)%256,
     a=255 — the ONE definition the SQL oracles' closed forms mirror."""
-    import numpy as np
-
     x = np.arange(size, dtype=np.int64)[None, :]
     y = np.arange(size, dtype=np.int64)[:, None]
     img = np.zeros((size, size, 4), dtype=np.uint8)
@@ -384,8 +252,6 @@ def _gray_blocks(mid: int, size: int, offset: int = 0):
     """The block-constant gray fixture: each 8x8 block holds
     (bx*7 + by*13 + id + offset) % 256 — only DC coefficients, so the
     baseline JPEG round trip is bit-exact (see functions/jpeg)."""
-    import numpy as np
-
     img = np.zeros((size, size), dtype=np.uint8)
     for by in range(size // 8):
         for bx in range(size // 8):
@@ -395,64 +261,39 @@ def _gray_blocks(mid: int, size: int, offset: int = 0):
     return img
 
 
-def synth_png_media(spark=None, n: int | None = None, parts: int = 4,
-                    size: int = 16, ids: DataFrame | None = None) -> DataFrame:
-    """REAL deterministic PNG media: per id, a size x size RGBA image with
-    r=(x+id)%256, g=(y+id)%256, b=(x+2y+id)%256, a=255 — closed-form pixel
-    stats make the decode path oracle-checkable. Pass `ids` (one media_id
-    column) or (spark, n)."""
-    from .tiles import _write_png_rgba
+def synth_png_media(ids: DataFrame, size: int = 16) -> DataFrame:
+    """REAL deterministic PNG media: per id (the `media_id` column of
+    `ids`), a size x size RGBA image with r=(x+id)%256, g=(y+id)%256,
+    b=(x+2y+id)%256, a=255 — closed-form pixel stats make the decode path
+    oracle-checkable."""
 
-    if ids is None:
-        ids = spark.range(n).repartition(parts).select(F.col("id").alias("media_id"))
+    def gen(r):
+        mid = int(r.media_id)
+        yield {"media_id": mid, "kind": "image", "mime": "image/png",
+               "payload": png.write_png_rgba(_png_pixels(mid, size)), "meta": None}
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.media_id)
-                rows.append(
-                    {"media_id": mid, "kind": "image", "mime": "image/png",
-                     "payload": _write_png_rgba(_png_pixels(mid, size)), "meta": None}
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
-
-    return ids.mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return per_row(ids, gen, MEDIA_SCHEMA)
 
 
-def synth_jpeg_media(spark=None, n: int | None = None, parts: int = 4,
-                     size: int = 16, ids: DataFrame | None = None) -> DataFrame:
-    """REAL deterministic baseline JPEGs: per id, a size x size gray-in-RGB
-    image whose 8x8 blocks are each constant v = (bx*7 + by*13 + id) % 256.
+def synth_jpeg_media(ids: DataFrame, size: int = 16) -> DataFrame:
+    """REAL deterministic baseline JPEGs: per id (the `media_id` column of
+    `ids`), a size x size gray-in-RGB image whose 8x8 blocks are each
+    constant v = (bx*7 + by*13 + id) % 256.
 
     Block-constant images have only DC coefficients, and at quality 75 the
     Annex-K luma DC quantizer is exactly the constant-block DCT gain (8),
     so decode(encode(img)) == img bit-exactly (see functions/jpeg) — pixel
     statistics are closed-form for SQL oracles, while the bytes exercise
     the full Huffman+DCT path."""
-    from ..functions import jpeg as _jpeg
 
-    if ids is None:
-        ids = spark.range(n).repartition(parts).select(F.col("id").alias("media_id"))
+    def gen(r):
+        mid = int(r.media_id)
+        g = _gray_blocks(mid, size)
+        yield {"media_id": mid, "kind": "image", "mime": "image/jpeg",
+               "payload": jpeg.encode_baseline(np.stack([g, g, g], axis=-1), quality=75),
+               "meta": None}
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.media_id)
-                g = _gray_blocks(mid, size)
-                rgb = np.stack([g, g, g], axis=-1)
-                rows.append(
-                    {"media_id": mid, "kind": "image", "mime": "image/jpeg",
-                     "payload": _jpeg.encode_baseline(rgb, quality=75), "meta": None}
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
-
-    return ids.mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return per_row(ids, gen, MEDIA_SCHEMA)
 
 
 def synth_wav_media(ids: DataFrame, n_samples: int = 256,
@@ -460,24 +301,16 @@ def synth_wav_media(ids: DataFrame, n_samples: int = 256,
     """REAL deterministic WAV media: per id, mono 16-bit PCM with integer
     sawtooth samples s[i] = ((i * k) % 65536) - 32768, k = (id % 97 + 3) *
     131 — closed-form mean/RMS make the decode path oracle-checkable."""
+    i = np.arange(n_samples, dtype=np.int64)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def gen(r):
+        mid = int(r.media_id)
+        k = (mid % 97 + 3) * 131
+        s = ((i * k) % 65536 - 32768).astype("<i2")
+        yield {"media_id": mid, "kind": "audio", "mime": "audio/wav",
+               "payload": encode_wav(s, rate), "meta": None}
 
-        i = np.arange(n_samples, dtype=np.int64)
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.media_id)
-                k = (mid % 97 + 3) * 131
-                s = ((i * k) % 65536 - 32768).astype("<i2")
-                rows.append(
-                    {"media_id": mid, "kind": "audio", "mime": "audio/wav",
-                     "payload": encode_wav(s, rate), "meta": None}
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
-
-    return ids.mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return per_row(ids, gen, MEDIA_SCHEMA)
 
 
 def synth_mixed_media(ids: DataFrame, size: int = 16,
@@ -493,43 +326,32 @@ def synth_mixed_media(ids: DataFrame, size: int = 16,
     deterministic payloads with real container magics (ID3v2, ftyp box)
     that no decoder here supports, exercising decode_media's
     status='unsupported_codec' contract on a mixed table."""
-    from ..functions import jpeg as _jpeg
-    from .tiles import _write_png_rgba
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def gen(r):
+        mid = int(r.media_id)
+        kind = "image"
+        sel = mid % 5 if with_unsupported else mid % 2
+        if with_unsupported and sel == 2:
+            i = np.arange(256, dtype=np.int64)
+            k = (mid % 97 + 3) * 131
+            s = ((i * k) % 65536 - 32768).astype("<i2")
+            payload, mime, kind = encode_wav(s, 8000), "audio/wav", "audio"
+        elif with_unsupported and sel == 3:
+            body = bytes((mid * 7 + j * 13) % 256 for j in range(64))
+            payload, mime, kind = b"ID3\x04\x00" + body, "audio/mpeg", "audio"
+        elif with_unsupported and sel == 4:
+            body = bytes((mid * 11 + j * 17) % 256 for j in range(64))
+            payload = b"\x00\x00\x00\x18ftypisom" + body
+            mime, kind = "video/mp4", "video"
+        elif sel % 2 == 0:
+            payload, mime = png.write_png_rgba(_png_pixels(mid, size)), "image/png"
+        else:
+            g = _gray_blocks(mid, size)
+            payload = jpeg.encode_baseline(np.stack([g, g, g], axis=-1), quality=75)
+            mime = "image/jpeg"
+        yield {"media_id": mid, "kind": kind, "mime": mime, "payload": payload, "meta": None}
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.media_id)
-                kind = "image"
-                sel = mid % 5 if with_unsupported else mid % 2
-                if with_unsupported and sel == 2:
-                    i = np.arange(256, dtype=np.int64)
-                    k = (mid % 97 + 3) * 131
-                    s = ((i * k) % 65536 - 32768).astype("<i2")
-                    payload, mime, kind = encode_wav(s, 8000), "audio/wav", "audio"
-                elif with_unsupported and sel == 3:
-                    body = bytes((mid * 7 + j * 13) % 256 for j in range(64))
-                    payload, mime, kind = b"ID3\x04\x00" + body, "audio/mpeg", "audio"
-                elif with_unsupported and sel == 4:
-                    body = bytes((mid * 11 + j * 17) % 256 for j in range(64))
-                    payload = b"\x00\x00\x00\x18ftypisom" + body
-                    mime, kind = "video/mp4", "video"
-                elif sel % 2 == 0:
-                    payload, mime = _write_png_rgba(_png_pixels(mid, size)), "image/png"
-                else:
-                    g = _gray_blocks(mid, size)
-                    payload = _jpeg.encode_baseline(
-                        np.stack([g, g, g], axis=-1), quality=75
-                    )
-                    mime = "image/jpeg"
-                rows.append({"media_id": mid, "kind": kind, "mime": mime,
-                             "payload": payload, "meta": None})
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
-
-    return ids.mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return per_row(ids, gen, MEDIA_SCHEMA)
 
 
 _MJPG_MAGIC = b"MJPG"
@@ -575,28 +397,17 @@ def synth_mjpeg_media(ids: DataFrame, n_frames: int = 4, size: int = 16) -> Data
     (block value = (bx*7 + by*13 + id + 31*frame) % 256) in the MJPG
     container — per-frame pixel stats are closed-form for oracles while the
     bytes exercise the full JPEG path per frame."""
-    from ..functions import jpeg as _jpeg
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def gen(r):
+        mid = int(r.media_id)
+        frames = []
+        for fi in range(n_frames):
+            g = _gray_blocks(mid, size, offset=31 * fi)
+            frames.append(jpeg.encode_baseline(np.stack([g, g, g], -1), quality=75))
+        yield {"media_id": mid, "kind": "video", "mime": "video/x-mjpg",
+               "payload": encode_mjpeg(frames), "meta": None}
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.media_id)
-                frames = []
-                for fi in range(n_frames):
-                    g = _gray_blocks(mid, size, offset=31 * fi)
-                    frames.append(
-                        _jpeg.encode_baseline(np.stack([g, g, g], -1), quality=75)
-                    )
-                rows.append(
-                    {"media_id": mid, "kind": "video", "mime": "video/x-mjpg",
-                     "payload": encode_mjpeg(frames), "meta": None}
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
-
-    return ids.mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return per_row(ids, gen, MEDIA_SCHEMA)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -620,51 +431,35 @@ def sample_video_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
     luma over the RGB planes, alpha excluded). Other containers raise
     NotImplementedError."""
 
-    def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def go(r):
+        buf = bytes(r.payload)
+        if buf[:4] == _MJPG_MAGIC:
+            frames = mjpeg_frames(buf)
+            decoded = [
+                (fi, jpeg.decode_baseline(frames[fi]), len(frames))
+                for fi in range(0, len(frames), every_n)
+            ]
+        elif buf[:6] in _GIF_MAGICS:
+            # compositing frame k needs frames 0..k-1, so the GIF decodes
+            # fully and sampling selects from the canvas sequence; luma
+            # excludes the alpha plane
+            gframes, _w, _h = gif.gif_frames(buf)
+            decoded = [
+                (fi, gframes[fi][:, :, :3], len(gframes))
+                for fi in range(0, len(gframes), every_n)
+            ]
+        else:
+            raise NotImplementedError(
+                "only the MJPG frame container and animated GIF "
+                "decode in this environment (real video codecs "
+                "are out of scope)"
+            )
+        for fi, img, n in decoded:
+            yield {"media_id": int(r.media_id), "frame_index": fi, "n_frames": n,
+                   "width": int(img.shape[1]), "height": int(img.shape[0]),
+                   "mean_luma": np.float32(img.mean())}
 
-        from ..functions import jpeg as _jpeg
-        from ..functions.gif import gif_frames
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                buf = bytes(r.payload)
-                if buf[:4] == _MJPG_MAGIC:
-                    frames = mjpeg_frames(buf)
-                    decoded = [
-                        (fi, _jpeg.decode_baseline(frames[fi]), len(frames))
-                        for fi in range(0, len(frames), every_n)
-                    ]
-                elif buf[:6] in _GIF_MAGICS:
-                    # compositing frame k needs frames 0..k-1, so the GIF
-                    # decodes fully and sampling selects from the canvas
-                    # sequence; luma excludes the alpha plane
-                    gframes, _w, _h = gif_frames(buf)
-                    decoded = [
-                        (fi, gframes[fi][:, :, :3], len(gframes))
-                        for fi in range(0, len(gframes), every_n)
-                    ]
-                else:
-                    raise NotImplementedError(
-                        "only the MJPG frame container and animated GIF "
-                        "decode in this environment (real video codecs "
-                        "are out of scope)"
-                    )
-                for fi, img, n in decoded:
-                    rows.append(
-                        {
-                            "media_id": int(r.media_id),
-                            "frame_index": fi,
-                            "n_frames": n,
-                            "width": int(img.shape[1]),
-                            "height": int(img.shape[0]),
-                            "mean_luma": np.float32(img.mean()),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SCHEMA.fields])
-
-    return media.select("media_id", "payload").mapInPandas(go, schema=FRAME_SCHEMA)
+    return per_row(media.select("media_id", "payload"), go, FRAME_SCHEMA)
 
 
 def synth_gif_media(ids: DataFrame, size: int = 16, n_frames: int = 4,
@@ -677,33 +472,24 @@ def synth_gif_media(ids: DataFrame, size: int = 16, n_frames: int = 4,
     written interlaced (the decoder must produce identical pixels either
     way, so the oracle pins de-interlacing too). n_frames > 1 makes an
     animated GIF89a (NETSCAPE loop + per-frame GCEs)."""
-    from ..functions.gif import encode_gif
+    i = np.arange(ncolors, dtype=np.int64)
+    pal = np.stack([(5 * i) % 256, (11 * i) % 256, (23 * i) % 256],
+                   axis=-1).astype(np.uint8)
+    x = np.arange(size, dtype=np.int64)[None, :]
+    y = np.arange(size, dtype=np.int64)[:, None]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def gen(r):
+        mid = int(r.media_id)
+        frames = [
+            ((x + 3 * y + mid + 7 * f) % ncolors).astype(np.uint8)
+            for f in range(n_frames)
+        ]
+        yield {"media_id": mid, "kind": "video" if n_frames > 1 else "image",
+               "mime": "image/gif",
+               "payload": gif.encode_gif(frames, pal, interlace=(mid % 2 == 0)),
+               "meta": None}
 
-        i = np.arange(ncolors, dtype=np.int64)
-        pal = np.stack([(5 * i) % 256, (11 * i) % 256, (23 * i) % 256],
-                       axis=-1).astype(np.uint8)
-        x = np.arange(size, dtype=np.int64)[None, :]
-        y = np.arange(size, dtype=np.int64)[:, None]
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.media_id)
-                frames = [
-                    ((x + 3 * y + mid + 7 * f) % ncolors).astype(np.uint8)
-                    for f in range(n_frames)
-                ]
-                payload = encode_gif(frames, pal, interlace=(mid % 2 == 0))
-                kind = "video" if n_frames > 1 else "image"
-                rows.append(
-                    {"media_id": mid, "kind": kind, "mime": "image/gif",
-                     "payload": payload, "meta": None}
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
-
-    return ids.mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return per_row(ids, gen, MEDIA_SCHEMA)
 
 
 def media_stats(media: DataFrame) -> DataFrame:
@@ -733,29 +519,19 @@ def resize_images(media: DataFrame, factor: int = 2) -> DataFrame:
     engine-exact for oracles), re-encode as PNG. RGBA-8 inputs; dimensions
     truncate to a multiple of `factor`. The training-data 'shrink for
     thumbnails / vision pretraining' transform, Arrow-batched."""
-    from .tiles import _write_png_rgba
 
-    def go(batches):
-        import numpy as np
+    def go(r):
+        img = png.decode_png(bytes(r.payload))
+        if img.shape[2] != 4:
+            raise NotImplementedError("RGBA-8 resize only")
+        h2 = img.shape[0] // factor
+        w2 = img.shape[1] // factor
+        crop = img[: h2 * factor, : w2 * factor].astype(np.int64)
+        out = (
+            crop.reshape(h2, factor, w2, factor, 4).sum(axis=(1, 3))
+            // (factor * factor)
+        ).astype(np.uint8)
+        yield {"media_id": int(r.media_id), "width": w2, "height": h2,
+               "payload": png.write_png_rgba(out)}
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                img = decode_png(bytes(r.payload))
-                if img.shape[2] != 4:
-                    raise NotImplementedError("RGBA-8 resize only")
-                h2 = img.shape[0] // factor
-                w2 = img.shape[1] // factor
-                crop = img[: h2 * factor, : w2 * factor].astype(np.int64)
-                out = (
-                    crop.reshape(h2, factor, w2, factor, 4).sum(axis=(1, 3))
-                    // (factor * factor)
-                ).astype(np.uint8)
-                rows.append(
-                    {"media_id": int(r.media_id), "width": w2, "height": h2,
-                     "payload": _write_png_rgba(out)}
-                )
-            if rows:
-                yield pd.DataFrame(rows, columns=[f.name for f in RESIZED_SCHEMA.fields])
-
-    return media.select("media_id", "payload").mapInPandas(go, schema=RESIZED_SCHEMA)
+    return per_row(media.select("media_id", "payload"), go, RESIZED_SCHEMA)

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..plans.stage import per_key
+
 
 def ring_area_signed(coords: list[tuple[float, float]]) -> float:
     """Shoelace: >0 = CCW in lon/lat axes."""
@@ -131,8 +133,4 @@ def assemble_relation_rings(members: DataFrame, ways: DataFrame,
             r["ring_index"] = i
         return pd.DataFrame(out_rows, columns=[f.name for f in RING_SCHEMA.fields]) if out_rows else pd.DataFrame(columns=[f.name for f in RING_SCHEMA.fields]).astype({"relation_id": "int64", "ring_index": "int32"})
 
-    from .tiles import _spread
-
-    return _spread(m, "relation_id").groupBy("relation_id").applyInPandas(
-        assemble, schema=RING_SCHEMA
-    )
+    return per_key(m, ["relation_id"], assemble, RING_SCHEMA)

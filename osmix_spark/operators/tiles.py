@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import geo, mvt
+from ..functions.png import decode_png, write_png_rgba
+from ..plans.stage import per_key, per_row, spread
 
 
 def point_tile_px(df: DataFrame, z: int, lon: str = "lon", lat: str = "lat",
@@ -51,16 +53,8 @@ def point_tile_px(df: DataFrame, z: int, lon: str = "lon", lat: str = "lat",
     )
 
 
-def _spread(df: DataFrame, *keys: str) -> DataFrame:
-    """Explicit-count repartition on the grouping keys before a
-    groupBy().applyInPandas: the hash exchange it introduces satisfies the
-    groupBy's distribution requirement (no second shuffle), but — unlike
-    the groupBy's own exchange — an explicit partition count is exempt
-    from AQE byte-based coalescing, which would otherwise pack a
-    small-by-bytes, CPU-heavy Python stage into 1-2 tasks (SCALE.md
-    global posture; measured round 4)."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)
-
+# The key every per-tile stage groups on.
+_TILE = ("z", "tx", "ty")
 
 # Ways per hash key of the vertex shuffle in encode_way_mvt_vertices. A
 # key's vertices stay in one partition, so a block must be small next to
@@ -73,9 +67,8 @@ WAY_BLOCK = 64
 def _by_way_block(df: DataFrame) -> DataFrame:
     """Hash-partition rows on `way_id div WAY_BLOCK` into
     defaultParallelism partitions (an explicit count, so AQE does not
-    coalesce them; see _spread)."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(par, F.expr(f"way_id div {WAY_BLOCK}"))
+    coalesce them; see plans.stage.spread)."""
+    return spread(df, F.expr(f"way_id div {WAY_BLOCK}"))
 
 
 MVT_SCHEMA = T.StructType(
@@ -155,11 +148,8 @@ def encode_point_mvt(points_px: DataFrame, layer: str = "points",
             ]
         )
 
-    return (
-        _spread(points_px.select(*cols), "z", "tx", "ty")
-        .groupBy("z", "tx", "ty")
-        .applyInPandas(encode, schema=MVT_STATS_SCHEMA if stats_only else MVT_SCHEMA)
-    )
+    return per_key(points_px.select(*cols), _TILE, encode,
+                   MVT_STATS_SCHEMA if stats_only else MVT_SCHEMA)
 
 
 def encode_way_mvt_vertices(verts: DataFrame, z: int, layer: str = "ways",
@@ -410,10 +400,7 @@ def merge_way_frames(stage1: DataFrame, layer: str = "ways") -> DataFrame:
         if rows:
             yield pd.DataFrame(rows, columns=[f.name for f in MVT_SCHEMA.fields])
 
-    par = stage1.sparkSession.sparkContext.defaultParallelism
-    return stage1.repartition(par, "z", "tx", "ty").mapInPandas(
-        merge_partition, schema=MVT_SCHEMA
-    )
+    return spread(stage1, *_TILE).mapInPandas(merge_partition, schema=MVT_SCHEMA)
 
 
 def _shoelace_px(pts: list[tuple[int, int]]) -> float:
@@ -485,7 +472,7 @@ def encode_polygon_mvt(rings_px: DataFrame, layer: str = "areas") -> DataFrame:
               "size_bytes": len(buf), "content_hash": h, "tile": buf}]
         )
 
-    return _spread(rings_px, "z", "tx", "ty").groupBy("z", "tx", "ty").applyInPandas(encode, schema=MVT_SCHEMA)
+    return per_key(rings_px, _TILE, encode, MVT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -502,23 +489,6 @@ RASTER_SCHEMA = T.StructType(
         T.StructField("png", T.BinaryType(), False),
     ]
 )
-
-
-def _write_png_rgba(arr) -> bytes:
-    """Minimal PNG writer (RGBA8): zlib-compressed scanlines, filter 0."""
-    import struct
-    import zlib
-
-    h, w = arr.shape[:2]
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        c = struct.pack(">I", len(data)) + typ + data
-        return c + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-
-    sig = b"\x89PNG\r\n\x1a\n"
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 6, 0, 0, 0)
-    raw = b"".join(b"\x00" + arr[y].tobytes() for y in range(h))
-    return sig + chunk(b"IHDR", ihdr) + chunk(b"IDAT", zlib.compress(raw, 6)) + chunk(b"IEND", b"")
 
 
 def render_point_raster(points_px: DataFrame, id_col: str = "id",
@@ -539,19 +509,15 @@ def render_point_raster(points_px: DataFrame, id_col: str = "id",
         xs = _clamp_round(pdf["px"].to_numpy() * scale, tile_size)
         ys = _clamp_round(pdf["py"].to_numpy() * scale, tile_size)
         img[ys, xs] = rgba
-        png = _write_png_rgba(img)
+        png = write_png_rgba(img)
         h = int.from_bytes(hashlib.md5(png).digest()[:8], "big") >> 1
         return pd.DataFrame(
             [{"z": z, "tx": tx, "ty": ty, "n_features": len(pdf),
               "content_hash": h, "png": png}]
         )
 
-    return (
-        _spread(points_px.select("z", "tx", "ty", id_col, "px", "py"),
-                "z", "tx", "ty")
-        .groupBy("z", "tx", "ty")
-        .applyInPandas(render, schema=RASTER_SCHEMA)
-    )
+    return per_key(points_px.select("z", "tx", "ty", id_col, "px", "py"),
+                   _TILE, render, RASTER_SCHEMA)
 
 
 def _js_round(x):
@@ -791,14 +757,14 @@ def render_line_raster(ways_px: DataFrame, tile_size: int = 256,
         counts = _line_counts(pdf.sort_values("way_id").itertuples(index=False),
                               tile_size, scale)
         _draw_counts(img, counts, rgba)
-        png = _write_png_rgba(img)
+        png = write_png_rgba(img)
         h = int.from_bytes(hashlib.md5(png).digest()[:8], "big") >> 1
         return pd.DataFrame(
             [{"z": z, "tx": tx, "ty": ty, "n_features": len(pdf),
               "content_hash": h, "png": png}]
         )
 
-    return _spread(ways_px, "z", "tx", "ty").groupBy("z", "tx", "ty").applyInPandas(render, schema=RASTER_SCHEMA)
+    return per_key(ways_px, _TILE, render, RASTER_SCHEMA)
 
 
 # --- linear-light premultiplied compositing (raster/src/color.ts) -----------
@@ -883,14 +849,14 @@ def render_polygon_raster(rings_px: DataFrame, tile_size: int = 256,
             "feature_id", sort=True
         ):
             img[_polygon_mask(grp, tile_size, scale) > 0] = rgba
-        png = _write_png_rgba(img)
+        png = write_png_rgba(img)
         h = int.from_bytes(hashlib.md5(png).digest()[:8], "big") >> 1
         return pd.DataFrame(
             [{"z": z, "tx": tx, "ty": ty, "n_features": int(pdf["feature_id"].nunique()),
               "content_hash": h, "png": png}]
         )
 
-    return _spread(rings_px, "z", "tx", "ty").groupBy("z", "tx", "ty").applyInPandas(render, schema=RASTER_SCHEMA)
+    return per_key(rings_px, _TILE, render, RASTER_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -990,14 +956,14 @@ def render_composite_raster(features: DataFrame, tile_size: int = 256,
             counts = np.zeros((tile_size, tile_size), dtype=np.int32)
             np.add.at(counts, (yi, xi), 1)
             _draw_counts(img, counts, point_rgba)
-        png = _write_png_rgba(img)
+        png = write_png_rgba(img)
         h = int.from_bytes(hashlib.md5(png).digest()[:8], "big") >> 1
         return pd.DataFrame(
             [{"z": z, "tx": tx, "ty": ty, "n_features": int(pdf["fid"].nunique()),
               "content_hash": h, "png": png}]
         )
 
-    return _spread(features, "z", "tx", "ty").groupBy("z", "tx", "ty").applyInPandas(render, schema=RASTER_SCHEMA)
+    return per_key(features, _TILE, render, RASTER_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1129,20 +1095,14 @@ def mvt_decoded_stats(tiles: DataFrame, layer: str) -> DataFrame:
     """Decode each materialized tile's protobuf bytes (functions/mvt
     decoder) and emit per-tile aggregates over the DECODED vertices."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                # vectorized varint decode (general geometries fall back to
-                # the scalar decoder per feature inside)
-                s = mvt.decode_tile_stats_np(bytes(r.tile)).get(layer)
-                if s is None or not s["n_features"]:
-                    continue
-                rows.append({"z": int(r.z), "tx": int(r.tx), "ty": int(r.ty), **s})
-            if rows:
-                yield pd.DataFrame(rows, columns=[f.name for f in MVT_STATS_SCHEMA.fields])
+    def stats(r):
+        # vectorized varint decode (general geometries fall back to the
+        # scalar decoder per feature inside)
+        s = mvt.decode_tile_stats_np(bytes(r.tile)).get(layer)
+        if s is not None and s["n_features"]:
+            yield {"z": int(r.z), "tx": int(r.tx), "ty": int(r.ty), **s}
 
-    return tiles.select("z", "tx", "ty", "tile").mapInPandas(stats, schema=MVT_STATS_SCHEMA)
+    return per_row(tiles.select("z", "tx", "ty", "tile"), stats, MVT_STATS_SCHEMA)
 
 
 RASTER_STATS_SCHEMA = T.StructType(
@@ -1158,62 +1118,23 @@ RASTER_STATS_SCHEMA = T.StructType(
 )
 
 
-def _read_png_rgba(data: bytes):
-    """Decode a PNG written by _write_png_rgba (RGBA8, filter 0 scanlines)
-    back into an (h, w, 4) uint8 array — pure stdlib zlib + NumPy."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    assert data[:8] == b"\x89PNG\r\n\x1a\n"
-    i = 8
-    w = h = 0
-    idat = bytearray()
-    while i < len(data):
-        (ln,) = struct.unpack(">I", data[i : i + 4])
-        typ = data[i + 4 : i + 8]
-        payload = data[i + 8 : i + 8 + ln]
-        if typ == b"IHDR":
-            w, h, bit_depth, color_type = struct.unpack(">IIBB", payload[:10])
-            assert bit_depth == 8 and color_type == 6, "RGBA8 only"
-        elif typ == b"IDAT":
-            idat += payload
-        i += 12 + ln
-    raw = zlib.decompress(bytes(idat))
-    stride = w * 4 + 1
-    arr = np.frombuffer(raw, dtype=np.uint8).reshape(h, stride)
-    assert (arr[:, 0] == 0).all(), "filter-0 scanlines only"
-    return arr[:, 1:].reshape(h, w, 4)
-
-
 def raster_pixel_stats(tiles: DataFrame) -> DataFrame:
     """Decode each raster tile's PNG and emit per-tile lit-pixel aggregates
     (alpha > 0): count plus coordinate sums — the SQL-checkable shadow of
     the rasterization."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def stats(r):
         import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                img = _read_png_rgba(bytes(r.png))
-                ys, xs = np.nonzero(img[:, :, 3] > 0)
-                rows.append(
-                    {
-                        "z": int(r.z), "tx": int(r.tx), "ty": int(r.ty),
-                        "n_features": int(r.n_features),
-                        "n_pixels": int(len(xs)),
-                        "sum_x": int(xs.sum()), "sum_y": int(ys.sum()),
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows, columns=[f.name for f in RASTER_STATS_SCHEMA.fields])
+        ys, xs = np.nonzero(decode_png(bytes(r.png))[:, :, 3] > 0)
+        yield {
+            "z": int(r.z), "tx": int(r.tx), "ty": int(r.ty),
+            "n_features": int(r.n_features), "n_pixels": int(len(xs)),
+            "sum_x": int(xs.sum()), "sum_y": int(ys.sum()),
+        }
 
-    return tiles.select("z", "tx", "ty", "n_features", "png").mapInPandas(
-        stats, schema=RASTER_STATS_SCHEMA
-    )
+    return per_row(tiles.select("z", "tx", "ty", "n_features", "png"), stats,
+                   RASTER_STATS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1264,7 +1185,7 @@ def shortbread_point_tiles(tagged_points: DataFrame, z: int) -> DataFrame:
               "size_bytes": len(buf), "content_hash": h, "tile": buf}]
         )
 
-    return _spread(px, "z", "tx", "ty").groupBy("z", "tx", "ty").applyInPandas(encode, schema=MVT_SCHEMA)
+    return per_key(px, _TILE, encode, MVT_SCHEMA)
 
 
 def mvt_decoded_layer_stats(tiles: DataFrame) -> DataFrame:
@@ -1278,16 +1199,8 @@ def mvt_decoded_layer_stats(tiles: DataFrame) -> DataFrame:
         + [f for f in MVT_STATS_SCHEMA.fields if f.name not in ("z", "tx", "ty")]
     )
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                for layer, s in mvt.decode_tile_stats_np(bytes(r.tile)).items():
-                    rows.append(
-                        {"z": int(r.z), "tx": int(r.tx), "ty": int(r.ty),
-                         "layer": layer, **s}
-                    )
-            if rows:
-                yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def stats(r):
+        for layer, s in mvt.decode_tile_stats_np(bytes(r.tile)).items():
+            yield {"z": int(r.z), "tx": int(r.tx), "ty": int(r.ty), "layer": layer, **s}
 
-    return tiles.select("z", "tx", "ty", "tile").mapInPandas(stats, schema=schema)
+    return per_row(tiles.select("z", "tx", "ty", "tile"), stats, schema)

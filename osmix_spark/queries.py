@@ -24,6 +24,7 @@ from .functions import geo, s2 as s2f, text
 from .functions.hashing import (portable_hash64, portable_hash64_pair_sql,
                                 portable_hash64_sql)
 from .operators import merge, spatial
+from .plans.stage import spread
 from .sources import layout, synth
 
 Query = Callable[[SparkSession, str], DataFrame]
@@ -1111,9 +1112,7 @@ def text_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # small parquet reads as one split; spread rows before the shingle
     # explode so the md5 work parallelizes (at real scale the scan has
     # thousands of splits and this repartition is a no-op to remove)
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = spread(_t(spark, sf_dir, "documents"))
     sig = _dedupe.minhash_signatures(_dedupe.shingle_set(docs), num_hashes=8)
     return sig.select("doc_id", *[F.col(f"h{i}").alias(f"mh{i}") for i in range(8)])
 
@@ -1154,9 +1153,7 @@ def text_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # small parquet reads as one split; spread rows before the shingle
     # explode so the md5 work parallelizes (at real scale the scan has
     # thousands of splits and this repartition is a no-op to remove)
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = spread(_t(spark, sf_dir, "documents"))
     sig = _dedupe.minhash_signatures(_dedupe.shingle_set(docs), num_hashes=4)
     bh0 = (F.col("h0") % 1000000007) * 1000003 + (F.col("h1") % 1000000007)
     bh1 = (F.col("h2") % 1000000007) * 1000003 + (F.col("h3") % 1000000007)
@@ -1498,9 +1495,7 @@ def text_jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedupe.lsh_candidate_pairs + jaccard_verify)."""
     from .operators import dedupe as _dedupe
 
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = spread(_t(spark, sf_dir, "documents"))
     sh = _dedupe.shingle_set(docs)
     sig = _dedupe.minhash_signatures(sh, num_hashes=8)
     pairs = _dedupe.lsh_candidate_pairs(sig, num_hashes=8, bands=4)
@@ -1926,9 +1921,7 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread the Python codec chain across cores — the documents table can
     # be a single parquet split, which would serialize both mapInPandas
     # stages onto one task
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id")
-    ).repartition(spark.sparkContext.defaultParallelism)
+    docs = spread(_t(spark, sf_dir, "documents").select(F.col("doc_id").alias("media_id")))
     media = _mm.synth_mixed_media(docs, size=16)
     out = _mm.decode_media(media)
     return out.select(
@@ -1958,9 +1951,7 @@ def multimodal_codec_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of task-time exceptions (multimodal.py boundary, VERDICT r3)."""
     from .operators import multimodal as _mm
 
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id")
-    ).repartition(spark.sparkContext.defaultParallelism)
+    docs = spread(_t(spark, sf_dir, "documents").select(F.col("doc_id").alias("media_id")))
     media = _mm.synth_mixed_media(docs, size=16, with_unsupported=True)
     out = _mm.decode_media(media, with_status=True)
     return out.select(
@@ -1999,9 +1990,7 @@ def multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver window; pytest pins this one (tests/test_oracle_extra.py)."""
     from .operators import multimodal as _mm
 
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id")
-    ).repartition(spark.sparkContext.defaultParallelism)
+    docs = spread(_t(spark, sf_dir, "documents").select(F.col("doc_id").alias("media_id")))
     media = _mm.synth_wav_media(docs)
     out = _mm.decode_media(media)
     return out.select(
@@ -2041,9 +2030,7 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by tests/test_oracle_extra.py."""
     from .operators import multimodal as _mm
 
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id")
-    ).repartition(spark.sparkContext.defaultParallelism)
+    docs = spread(_t(spark, sf_dir, "documents").select(F.col("doc_id").alias("media_id")))
     media = _mm.synth_mjpeg_media(docs, n_frames=4, size=16)
     out = _mm.sample_video_frames(media, every_n=2)
     return out.select(
@@ -2085,9 +2072,7 @@ def multimodal_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_oracle_extra.py."""
     from .operators import multimodal as _mm
 
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id")
-    ).repartition(spark.sparkContext.defaultParallelism)
+    docs = spread(_t(spark, sf_dir, "documents").select(F.col("doc_id").alias("media_id")))
     media = _mm.synth_gif_media(docs, size=16, n_frames=4, ncolors=64)
     out = _mm.sample_video_frames(media, every_n=3)
     return out.select(
@@ -2133,9 +2118,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode end to end."""
     from .operators import multimodal as _mm
 
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id")
-    ).repartition(spark.sparkContext.defaultParallelism)  # see multimodal_decode
+    docs = spread(_t(spark, sf_dir, "documents").select(F.col("doc_id").alias("media_id")))
     media = _mm.synth_png_media(ids=docs, size=16)
     resized = _mm.resize_images(media, factor=2)
     out = _mm.decode_media(resized.withColumn("kind", F.lit("image")))

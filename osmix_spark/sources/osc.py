@@ -12,13 +12,11 @@ and tests.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..plans.stage import per_row
 
 _ESCAPES = [("&", "&amp;"), ("<", "&lt;"), (">", "&gt;"), ('"', "&quot;"), ("'", "&apos;")]
 
@@ -86,16 +84,11 @@ def render_change_fragments(changes: DataFrame, entity: str = "node") -> DataFra
         ]
     )
 
-    def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                rows.append(
-                    {"change_type": r["change_type"], "id": int(r["id"]), "xml": render(r)}
-                )
-            yield pd.DataFrame(rows, columns=["change_type", "id", "xml"])
+    def go(r):
+        r = r._asdict()
+        yield {"change_type": r["change_type"], "id": int(r["id"]), "xml": render(r)}
 
-    return changes.mapInPandas(go, schema=schema)
+    return per_row(changes, go, schema)
 
 
 def _stream_osc(out, node_changes: DataFrame | None, way_changes: DataFrame | None,
@@ -164,26 +157,16 @@ def render_augmented_fragments(changes: DataFrame, entity: str = "node") -> Data
         ]
     )
 
-    def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                ct = r["change_type"]
-                old_r = {
-                    k[len("old_"):]: v for k, v in r.items() if k.startswith("old_")
-                }
-                old_x = "<old/>" if ct == "create" else f"<old>{render(old_r)}</old>"
-                new_x = "<new/>" if ct == "delete" else f"<new>{render(r)}</new>"
-                rows.append(
-                    {
-                        "change_type": ct,
-                        "id": int(r["id"]),
-                        "xml": f'<action type="{ct}">{old_x}{new_x}</action>',
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["change_type", "id", "xml"])
+    def go(r):
+        r = r._asdict()
+        ct = r["change_type"]
+        old_r = {k[len("old_"):]: v for k, v in r.items() if k.startswith("old_")}
+        old_x = "<old/>" if ct == "create" else f"<old>{render(old_r)}</old>"
+        new_x = "<new/>" if ct == "delete" else f"<new>{render(r)}</new>"
+        yield {"change_type": ct, "id": int(r["id"]),
+               "xml": f'<action type="{ct}">{old_x}{new_x}</action>'}
 
-    return changes.mapInPandas(go, schema=schema)
+    return per_row(changes, go, schema)
 
 
 def _stream_augmented_diff(out, node_changes: DataFrame | None,

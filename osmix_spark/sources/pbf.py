@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import os
 import zlib
-from typing import Iterator
 
 import pandas as pd
 
@@ -32,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import protowire as pw
+from ..plans.stage import per_row, spread
 
 MAX_ENTITIES_PER_BLOCK = 8000  # pbf/src/spec.ts:3-10
 NANO = 1_000_000_000
@@ -434,32 +434,24 @@ def read_pbf(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     mapInPandas tasks that each read their (offset, length) slice."""
     blobs = [(o, ln) for o, ln, t in index_blobs(path) if t == "OSMData"]
     apath = os.path.abspath(path)
-    idx = spark.createDataFrame(blobs, "offset long, length long").repartition(
-        max(spark.sparkContext.defaultParallelism, 1)
-    )
+    idx = spread(spark.createDataFrame(blobs, "offset long, length long"))
 
     def decode(kind: str):
-        def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows: list[dict] = []
-                with open(apath, "rb") as f:
-                    for r in pdf.itertuples(index=False):
-                        f.seek(r.offset)
-                        frame = f.read(r.length)
-                        _i, _t, payload = _read_blob_frame(frame, 0)
-                        for ents in _decode_block(payload):
-                            if ents["kind"] == kind:
-                                rows.extend(ents["rows"])
-                if rows:  # empty partitions yield nothing (dtype-less
-                    # empty frames break Arrow map conversion)
-                    yield pd.DataFrame(rows)
+        def go(r):
+            with open(apath, "rb") as f:
+                f.seek(r.offset)
+                frame = f.read(r.length)
+            _i, _t, payload = _read_blob_frame(frame, 0)
+            for ents in _decode_block(payload):
+                if ents["kind"] == kind:
+                    yield from ents["rows"]
 
         return go
 
     return {
-        "nodes": idx.mapInPandas(decode("node"), schema=NODE_SCHEMA),
-        "ways": idx.mapInPandas(decode("way"), schema=WAY_SCHEMA),
-        "relations": idx.mapInPandas(decode("relation"), schema=REL_SCHEMA),
+        "nodes": per_row(idx, decode("node"), NODE_SCHEMA),
+        "ways": per_row(idx, decode("way"), WAY_SCHEMA),
+        "relations": per_row(idx, decode("relation"), REL_SCHEMA),
     }
 
 

@@ -15,12 +15,13 @@ from __future__ import annotations
 
 import os
 import struct
-from typing import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from ..plans.stage import per_row, spread
 
 SHAPE_SCHEMA = T.StructType(
     [
@@ -68,27 +69,19 @@ def index_shp(path: str) -> list[tuple[int, int]]:
 def read_shp(spark: SparkSession, path: str) -> DataFrame:
     recs = index_shp(path)
     apath = os.path.abspath(path)
-    idx = spark.createDataFrame(
+    idx = spread(spark.createDataFrame(
         [(n + 1, o, ln) for n, (o, ln) in enumerate(recs)],
         "record_no long, offset long, length long",
-    ).repartition(max(spark.sparkContext.defaultParallelism, 1))
+    ))
 
-    def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            with open(apath, "rb") as f:
-                for r in pdf.itertuples(index=False):
-                    f.seek(r.offset + 8)
-                    content = f.read(r.length - 8)
-                    kind, lons, lats = decode_shp_record(content)
-                    rows.append(
-                        {"record_no": int(r.record_no), "geom_type": kind,
-                         "lons": lons, "lats": lats}
-                    )
-            if rows:
-                yield pd.DataFrame(rows)
+    def go(r):
+        with open(apath, "rb") as f:
+            f.seek(r.offset + 8)
+            content = f.read(r.length - 8)
+        kind, lons, lats = decode_shp_record(content)
+        yield {"record_no": int(r.record_no), "geom_type": kind, "lons": lons, "lats": lats}
 
-    return idx.mapInPandas(go, schema=SHAPE_SCHEMA)
+    return per_row(idx, go, SHAPE_SCHEMA)
 
 
 def read_dbf(path: str) -> pd.DataFrame:

@@ -14,12 +14,11 @@ ring order as stored and normalize winding at tile-encode time).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ..plans.stage import per_row
 
 _POINT, _LINESTRING, _POLYGON = 1, 2, 3
 
@@ -79,16 +78,8 @@ def parse_wkb_column(df: DataFrame, id_col: str = "geom_id",
                      wkb_col: str = "wkb") -> DataFrame:
     """(id, wkb binary) -> GEOM_SCHEMA rows, Arrow-batched."""
 
-    def go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                t, lons, lats = parse_wkb(bytes(getattr(r, wkb_col)))
-                rows.append(
-                    {"geom_id": int(getattr(r, id_col)), "geom_type": t,
-                     "lons": lons, "lats": lats}
-                )
-            if rows:
-                yield pd.DataFrame(rows)
+    def go(r):
+        t, lons, lats = parse_wkb(bytes(getattr(r, wkb_col)))
+        yield {"geom_id": int(getattr(r, id_col)), "geom_type": t, "lons": lons, "lats": lats}
 
-    return df.mapInPandas(go, schema=GEOM_SCHEMA)
+    return per_row(df, go, GEOM_SCHEMA)

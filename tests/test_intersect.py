@@ -118,6 +118,38 @@ def test_crossing_at_a_node_of_way_a_only_is_counted_and_spliced(spark):
     assert w[10] == [1, 2, 3] and w[11] == [4, 2, 5]
 
 
+def test_node_ids_above_2_pow_53_stay_exact(spark):
+    # way 11 zig-zags across way 10 twice: mid-segment between nodes 1 and
+    # B (near_a null) and exactly at node B (near_a = B). Both points come
+    # from one candidate pair, so one Arrow batch holds near_a = [null, B];
+    # a float64 column would turn B into 2**53, a node that does not exist
+    big = 2**53 + 1
+    nodes = spark.createDataFrame(
+        [
+            (1, 0.0, 0.0, None), (big, 0.002, 0.0, None), (3, 0.004, 0.0, None),
+            (11, 0.001, -0.002, None), (12, 0.001, 0.001, None),
+            (13, 0.004, -0.002, None), (14, 0.005, -0.001, None),
+        ],
+        fixtures.NODE_SCHEMA,
+    )
+    ways = spark.createDataFrame(
+        [
+            (10, [1, big, 3], {"highway": "primary"}),
+            (11, [11, 12, 13, 14], {"highway": "secondary"}),
+        ],
+        fixtures.WAY_SCHEMA,
+    )
+    pts = intersect.find_intersection_points(ways, nodes).collect()
+    assert {r["near_a"] for r in pts} == {None, big}
+    assert all(r["near_b"] is None for r in pts)
+
+    new_nodes, updated_ways, tagged, _stats = intersect.create_intersections(ways, nodes)
+    assert [r["id"] for r in new_nodes.collect()] == [big + 1]
+    assert {r["id"] for r in tagged.collect()} == {big}
+    w = {r["id"]: r["refs"] for r in updated_ways.collect()}
+    assert big + 1 in w[10] and {big, big + 1} <= set(w[11])
+
+
 def test_counters_launch_no_count_job_and_leave_no_cache(spark, spark_jobs,
                                                           cache_is_empty, merged):
     nodes, ways = merged

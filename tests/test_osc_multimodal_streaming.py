@@ -185,7 +185,7 @@ def test_png_decode_all_filters():
 
     import numpy as np
 
-    from osmix_spark.operators import multimodal as mm
+    from osmix_spark.functions.png import decode_png
 
     rng = np.random.default_rng  # not used: deterministic grid below
     img = np.zeros((5, 4, 4), dtype=np.uint8)
@@ -229,14 +229,19 @@ def test_png_decode_all_filters():
            + chunk(b"IHDR", struct.pack(">IIBBBBB", 4, 5, 8, 6, 0, 0, 0))
            + chunk(b"IDAT", zlib.compress(bytes(raws)))
            + chunk(b"IEND", b""))
-    out = mm.decode_png(png)
+    out = decode_png(png)
     assert (out == img).all()
 
 
 def test_decode_media_real_png(spark):
-    from osmix_spark.operators import multimodal as mm
+    from pyspark.sql import functions as F
 
-    media = mm.synth_png_media(spark, n=6, size=8)
+    from osmix_spark.operators import multimodal as mm
+    from osmix_spark.plans.stage import spread
+
+    media = mm.synth_png_media(
+        ids=spread(spark.range(6).select(F.col("id").alias("media_id"))), size=8
+    )
     out = {r["media_id"]: r for r in mm.decode_media(media).collect()}
     assert len(out) == 6
     for mid, r in out.items():
